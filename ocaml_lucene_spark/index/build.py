@@ -732,10 +732,15 @@ def add_documents(
     current max (append-only doc space, Lucene name_counter analogue,
     codec/segments.ml:22-31) and build a new segment. Existing segments
     are untouched; queries aggregate stats across all live segments, so
-    results equal a from-scratch single-segment build (tested)."""
+    results equal a from-scratch single-segment build (tested).
+
+    The base is the highest live doc id + 1, not the live doc count: a
+    purging merge lowers the count but leaves the surviving ids where
+    they are, so a count-based base would hand out ids still in use."""
     from . import segments as seg
 
-    base = sum(r["n_docs"] for r in seg.list_segments(index_dir))
+    bounds = seg.doc_bounds(index_dir)
+    base = bounds[1] + 1 if bounds is not None else 0
     # prune to the needed columns BEFORE the enumeration UDF (column-
     # pruning barrier, see assign_doc_ids)
     keep = ["url", text_col] + ([build_kw["html_col"]] if build_kw.get("html_col") else [])

@@ -88,19 +88,11 @@ def merge_segments(
     ]
     blocks = spark.read.parquet(*posting_paths)
 
-    # merged doc-id span (cheap column-pruned scan of the norms tables):
-    # salted rows are re-bucketed over it below so the merged segment
-    # keeps the doc-contiguous salt property WAND pruning relies on
-    norm_paths_pre = [
-        seg.segment_paths(index_dir, s)["norms"] for s in segment_names
-    ]
-    m_lo, m_hi = (
-        spark.read.parquet(*norm_paths_pre)
-        .agg(F.min("doc_id"), F.max("doc_id"))
-        .first()
-    )
-    m_lo = int(m_lo or 0)
-    m_span = int(m_hi) - m_lo + 1 if m_hi is not None else 1
+    # merged doc-id span (the sources' norms footers): salted rows are
+    # re-bucketed over it below so the merged segment keeps the
+    # doc-contiguous salt property WAND pruning relies on
+    bounds = seg.doc_bounds(index_dir, segment_names)
+    m_lo, m_span = (bounds[0], bounds[1] - bounds[0] + 1) if bounds else (0, 1)
     n_salts_merged = n_salts
 
     pos_schema = (

@@ -397,6 +397,52 @@ def list_segments(index_dir: str, live_only: bool = True) -> list[dict]:
     return sorted(out, key=lambda r: r["generation"])
 
 
+def doc_bounds(
+    index_dir: str, segments: list[str] | None = None
+) -> tuple[int, int] | None:
+    """(min_doc_id, max_doc_id) over the norms of ``segments`` (default:
+    every live segment) from the parquet footers — driver-side
+    metadata, no Spark job. The norms hold a row for every doc a
+    segment stores (deleted but unpurged docs included), so the span
+    covers every posting block and every doc id still taken. A row
+    group without doc_id statistics is read for that one column. None
+    when the segments hold no docs."""
+    import glob
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if segments is None:
+        segments = [r["segment"] for r in list_segments(index_dir)]
+    lo = hi = None
+    for s in segments:
+        ndir = segment_paths(index_dir, s)["norms"]
+        for fn in glob.glob(os.path.join(ndir, "*.parquet")):
+            pf = pq.ParquetFile(fn)
+            md = pf.metadata
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                st = next(
+                    rg.column(i).statistics
+                    for i in range(rg.num_columns)
+                    if rg.column(i).path_in_schema == "doc_id"
+                )
+                if st is not None and st.has_min_max:
+                    g_lo, g_hi = st.min, st.max
+                else:
+                    mm = pc.min_max(
+                        pf.read_row_group(g, columns=["doc_id"]).column(0)
+                    ).as_py()
+                    g_lo, g_hi = mm["min"], mm["max"]
+                lo = g_lo if lo is None else min(lo, g_lo)
+                hi = g_hi if hi is None else max(hi, g_hi)
+    if lo is None:
+        return None
+    return int(lo), int(hi)
+
+
 def write_manifest_row(index_dir: str, row: dict) -> None:
     mdir = os.path.join(index_dir, "manifest")
     os.makedirs(mdir, exist_ok=True)

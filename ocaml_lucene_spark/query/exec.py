@@ -1,6 +1,6 @@
 """Physical query execution over packed segments.
 
-Three plans, same results (tested against each other and the oracle;
+Two plans, same results (tested against each other and the oracle;
 bm25_topk_auto routes between them with zero Spark jobs):
 
 1. ``bm25_topk_indexed`` — distributed exhaustive: parquet scan of the
@@ -10,34 +10,39 @@ bm25_topk_auto routes between them with zero Spark jobs):
    groupBy(doc_id) agg -> TakeOrderedAndProject(k). Scales to hot
    terms whose posting lists span many partitions.
 
-2. ``bm25_topk_wand_exec`` — block-max WAND (query/wand.py) over the
-   same blocks with lazy decode: for the common case (few terms, k
-   small) it decodes a fraction of the blocks. The candidate blocks
-   shuffle to ONE executor task per query which returns just the k
-   result rows (payloads never touch the driver);
-   ``bm25_topk_wand`` is the driver-local test/debug variant.
+2. ``bm25_topk_wand_parallel`` — block-max WAND (query/wand.py) with
+   lazy decode over contiguous doc ranges: one clipped pruning sweep
+   per range, exact union merge, bounded per-task memory. With one
+   range (``bm25_topk_wand_exec``, the router's ``wand`` plan) every
+   candidate block goes to ONE executor task, which for the common
+   case (few terms, k small) decodes a fraction of the blocks and
+   returns just the k result rows — payloads never touch the driver.
 
-3. ``bm25_topk_wand_parallel`` — doc-range-parallel WAND: contiguous
-   doc ranges, one clipped pruning sweep per range, exact union merge
-   (bounded per-task memory for hot queries).
-
-Stats (N, avgdl, df) aggregate across all live segments, so scores are
-identical to a single-segment index over the same docs — which is what
-makes merge a pure layout operation (tested).
+Both plans share one preamble (_prepare): N and avgdl from the
+manifest, per-term df from the in-memory FST term dictionaries
+(query/term_index.py), so reading df runs no Spark job. Stats
+aggregate across all live segments, so scores are identical to a
+single-segment index over the same docs — which is what makes merge a
+pure layout operation (tested).
 """
 
 from __future__ import annotations
 
 import math
+from collections import namedtuple
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..index import segments as seg
+from ..index.deletes import deleted_ids
 from ..oracle import B, K1
-from .wand import PostingList, block_max_wand, frontier_ub, tfn_ub
+from .term_index import dir_token, doc_freqs_mem
+from .wand import DeletedDocSet, PostingList, block_max_wand, frontier_ub, tfn_ub
 
 
 def live_segment_paths(index_dir: str) -> list[str]:
@@ -58,65 +63,67 @@ def global_stats(index_dir: str) -> dict:
     }
 
 
-def term_dfs(spark: SparkSession, index_dir: str, terms: list[str]) -> dict[str, int]:
-    """df per query term aggregated across live segments (terms parquet,
-    predicate pushdown on the sorted term column)."""
-    paths = [
-        seg.segment_paths(index_dir, r["segment"])["terms"]
-        for r in seg.list_segments(index_dir)
-    ]
-    if not paths:
-        return {}
-    df = (
-        spark.read.parquet(*paths)
-        .filter(F.col("term").isin(terms))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-    )
-    return {r.term: r.df for r in df.collect()}
-
-
 def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def _segment_doc_bounds(index_dir: str) -> tuple[int, int] | None:
-    """(min_doc_id, max_doc_id) across live segments from the norms
-    parquet footers — pure driver-side metadata, no Spark job. None if
-    any file lacks doc_id statistics (caller falls back to an agg)."""
-    import glob as _glob
+class _Query(NamedTuple):
+    terms: list[str]  # deduplicated, first-seen order
+    require: list[str]  # must clauses (every term for mode='and')
+    dfs: dict[str, int]  # present terms only
+    idfs: dict[str, float]
+    avgdl: float
+    empty: bool  # provably no result: skip the scan
 
-    import pyarrow.parquet as _pq
 
-    lo, hi = None, None
-    for r in seg.list_segments(index_dir):
-        ndir = seg.segment_paths(index_dir, r["segment"])["norms"]
-        files = _glob.glob(f"{ndir}/*.parquet")
-        if not files:
-            return None
-        for fn in files:
-            try:
-                md = _pq.ParquetFile(fn).metadata
-            except Exception:
-                return None
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                for i in range(rg.num_columns):
-                    c = rg.column(i)
-                    if c.path_in_schema == "doc_id":
-                        st = c.statistics
-                        if st is None or st.min is None or st.max is None:
-                            return None
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-    if lo is None:
-        return None
-    return int(lo), int(hi)
+def _prepare(
+    index_dir: str, terms: list[str], mode: str, must: list[str] | None
+) -> _Query:
+    """The preamble every BM25 plan shares: dedup terms, check must is
+    a subset of terms, derive the required set, read N/avgdl from the
+    manifest and df from the in-memory term dictionaries (no Spark
+    job), compute idfs, and decide the empty result — no scoring term
+    in the index, or a required term absent."""
+    terms = list(dict.fromkeys(terms))
+    if must and not set(must) <= set(terms):
+        raise ValueError(
+            f"must clauses {sorted(set(must) - set(terms))} are not in terms; "
+            "must is a subset of the scored terms (add them to terms)"
+        )
+    require = list(dict.fromkeys(must)) if must else (
+        terms if mode == "and" else []
+    )
+    stats = global_stats(index_dir)
+    dfs = doc_freqs_mem(index_dir, terms)
+    empty = not any(t in dfs for t in terms) or any(t not in dfs for t in require)
+    idfs = {t: idf(stats["n_docs"], dfs.get(t, 0)) for t in terms}
+    return _Query(terms, require, dfs, idfs, stats["avgdl"], empty)
+
+
+def _empty(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame([], "doc_id long, score double")
+
+
+# index_dir -> (postings directories' fingerprints, their Spark schema)
+_POSTINGS_SCHEMA: dict[str, tuple[tuple, StructType]] = {}
 
 
 def _postings_df(spark: SparkSession, index_dir: str, terms: list[str]) -> DataFrame:
+    """The live segments' postings blocks of ``terms`` (the term
+    predicate pushes down to row groups). Spark infers a parquet schema
+    from a file footer in a Spark job of its own, so the schema is
+    inferred once per set of postings directories and reused while
+    their fingerprints hold."""
     paths = live_segment_paths(index_dir)
-    return spark.read.parquet(*paths).filter(F.col("term").isin(terms))
+    key = tuple((p, dir_token(p)) for p in paths)
+    cached = _POSTINGS_SCHEMA.get(index_dir)
+    if cached is None or cached[0] != key:
+        cached = (key, spark.read.parquet(*paths).schema)
+        _POSTINGS_SCHEMA[index_dir] = cached
+    return (
+        spark.read.schema(cached[1]).parquet(*paths)
+        .filter(F.col("term").isin(terms))
+    )
 
 
 def term_doc_ids_df(
@@ -268,7 +275,6 @@ def bm25_topk_indexed(
     last row — returns the NEXT k results in (score DESC, doc_id ASC)
     order. k=None returns the full unordered scored frame (combiner
     input, e.g. DisMax)."""
-    terms = list(dict.fromkeys(terms))
     if after is not None and round_to is None:
         # the cursor comes from a previous page, whose scores were
         # rounded; comparing an unrounded float cursor with == is
@@ -278,20 +284,10 @@ def bm25_topk_indexed(
             "search_after requires round_to: the (score, doc_id) cursor "
             "is only exact when scores are rounded on both pages"
         )
-    if must and not set(must) <= set(terms):
-        raise ValueError(
-            f"must clauses {sorted(set(must) - set(terms))} are not in terms; "
-            "must is a subset of the scored terms (add them to terms)"
-        )
-    must_set = list(dict.fromkeys(must)) if must else (
-        terms if mode == "and" else []
-    )
-    stats = global_stats(index_dir)
-    dfs = term_dfs(spark, index_dir, terms)
-    if must_set and (not terms or any(t not in dfs for t in must_set)):
-        return spark.createDataFrame([], "doc_id long, score double")
-    idfs = {t: idf(stats["n_docs"], dfs.get(t, 0)) for t in terms}
-    avgdl = stats["avgdl"]
+    q = _prepare(index_dir, terms, mode, must)
+    if q.empty:
+        return _empty(spark)
+    terms, must_set, dfs, idfs, avgdl = q.terms, q.require, q.dfs, q.idfs, q.avgdl
 
     blocks = _postings_df(spark, index_dir, terms).select(
         "term", "n", "first_doc", "last_doc", "doc_bytes", "tf_bytes", "dl_bytes"
@@ -709,53 +705,11 @@ def highlight_topk(
     )
 
 
-def bm25_topk_wand(
-    spark: SparkSession,
-    index_dir: str,
-    terms: list[str],
-    mode: str = "or",
-    k: int = 10,
-    round_to: int | None = None,
-    exclude: list[str] | None = None,
-) -> tuple[list[tuple[int, float]], dict]:
-    """Driver-local block-max WAND; returns ([(doc_id, score)], prune
-    metrics). Test/debug surface — production queries go through
-    ``bm25_topk_wand_exec``, which runs the same algorithm inside one
-    executor task instead of collecting payloads to the driver."""
-    terms = list(dict.fromkeys(terms))
-    exclude = list(dict.fromkeys(exclude or []))
-    stats = global_stats(index_dir)
-    dfs = term_dfs(spark, index_dir, terms)
-    if mode == "and" and (not terms or any(t not in dfs for t in terms)):
-        return [], {"decoded_blocks": 0, "total_blocks": 0, "n_lists": 0}
-    avgdl = stats["avgdl"]
-    idfs = {t: idf(stats["n_docs"], dfs.get(t, 0)) for t in terms}
-    rows = (
-        _postings_df(spark, index_dir, terms + exclude)
-        .select(
-            "term", "block_no", "first_doc", "last_doc", "max_tf", "min_dl",
-            "ub_tfs", "ub_dls", "doc_bytes", "tf_bytes", "dl_bytes",
-        )
-        .collect()
-    )
-    # exclusion is a pure doc filter: a term in BOTH terms and exclude is
-    # scored AND its docs are dropped (matching the SQL oracle's NOT IN),
-    # so the exclusion lists are built from the FULL exclude set
-    inc = [r for r in rows if r.term in set(terms)]
-    exc = [r for r in rows if r.term in set(exclude)]
-    lists = build_posting_lists(inc, idfs, avgdl)
-    xlists = build_posting_lists(exc, {t: 0.0 for t in exclude}, avgdl)
-    require = set(terms) if mode == "and" else None
-    return block_max_wand(
-        lists, k, require_all_terms=require, round_to=round_to,
-        exclude_lists=xlists or None, term_order=terms,
-    )
-
-
 _WAND_BLOCK_COLS = (
     "term", "block_no", "first_doc", "last_doc", "max_tf", "min_dl",
     "ub_tfs", "ub_dls", "doc_bytes", "tf_bytes", "dl_bytes",
 )
+_WandBlock = namedtuple("_WandBlock", _WAND_BLOCK_COLS)
 
 
 def _deleted_filter(spark: SparkSession, index_dir: str, df: DataFrame) -> DataFrame:
@@ -763,71 +717,11 @@ def _deleted_filter(spark: SparkSession, index_dir: str, df: DataFrame) -> DataF
     results only — scoring stats intentionally still include deleted
     docs until a purging merge, Lucene semantics). The deleted set is
     metadata-sized; no-op when the index has no deletes."""
-    from ..index.deletes import deleted_ids
-
     ids = deleted_ids(index_dir)
     if not ids.size:
         return df
     dd = spark.createDataFrame([(int(i),) for i in ids], "doc_id long")
     return df.join(F.broadcast(dd), "doc_id", "left_anti")
-
-
-def _make_wand_task(
-    terms: list[str],
-    exclude: list[str],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-    require: set[str] | None,
-    round_to: int | None,
-    acc_decoded,
-    acc_total,
-    min_should_match: int = 0,
-    deleted: np.ndarray | None = None,
-):
-    """The executor-side WAND task body shared by the single-task and
-    doc-range-parallel plans: one pandas frame of block rows
-    (_WAND_BLOCK_COLS) -> the local top-k frame, with prune counters
-    accumulated. min_doc/max_doc clip the sweep for range tasks."""
-    from collections import namedtuple
-
-    Blk = namedtuple("Blk", " ".join(_WAND_BLOCK_COLS))
-    # full exclude set: exclusion is a doc filter, independent of scoring
-    # — a term can be both scored and excluded (oracle NOT IN semantics)
-    inc_set, exc_set = set(terms), set(exclude)
-
-    def task(pdf, min_doc: int = 0, max_doc: int | None = None):
-        rows = [Blk(*t) for t in zip(*(pdf[c] for c in _WAND_BLOCK_COLS))]
-        lists = build_posting_lists(
-            [r for r in rows if r.term in inc_set], idfs, avgdl
-        )
-        xlists = build_posting_lists(
-            [r for r in rows if r.term in exc_set],
-            {t: 0.0 for t in exc_set},
-            avgdl,
-        )
-        dset = None
-        if deleted is not None and deleted.size:
-            from .wand import DeletedDocSet
-
-            dset = DeletedDocSet(deleted)
-        out, m = block_max_wand(
-            lists, k, require_all_terms=require, round_to=round_to,
-            exclude_lists=xlists or None, term_order=terms,
-            min_doc=min_doc, max_doc=max_doc,
-            min_should_match=min_should_match,
-            exclude_doc_set=dset,
-        )
-        acc_decoded.add(int(m["decoded_blocks"]))
-        acc_total.add(int(m["total_blocks"]))
-        return pd.DataFrame(
-            {
-                "doc_id": pd.Series([d for d, _ in out], dtype="int64"),
-                "score": pd.Series([s for _, s in out], dtype="float64"),
-            }
-        )
-
-    return task
 
 
 def bm25_topk_wand_exec(
@@ -842,76 +736,17 @@ def bm25_topk_wand_exec(
     must: list[str] | None = None,
     min_should_match: int = 0,
 ) -> DataFrame:
-    """Cluster-side block-max WAND: one executor task per query.
+    """Cluster-side block-max WAND in ONE executor task: the doc-range
+    plan (``bm25_topk_wand_parallel``) with a single range, so every
+    candidate block goes to one task, which returns only the k result
+    rows. The router's ``wand`` plan: right when the candidate set is
+    small (few query terms, k small); pruning is then global.
 
-    The candidate blocks (query terms only — term predicate pushes down
-    to row groups) shuffle to a single task, which runs block_max_wand
-    with lazy decode and returns only the k result rows; packed
-    payloads never touch the driver. This is the production plan for
-    the common case (few query terms, k small). Queries whose term set
-    is too hot for one task use ``bm25_topk_indexed``, the distributed
-    exhaustive plan.
-
-    must: BooleanQuery must clauses (subset of ``terms``); the rest of
-    ``terms`` are should clauses. mode='and' is shorthand for
-    must=terms. (block_max_wand's require_all_terms handles mixed
-    must+should exactly: coverage-based pivots only consider the must
-    terms, should lists contribute score and bounds.)
-
-    metrics: optional dict to receive pruning counters (decoded_blocks /
-    total_blocks, via accumulators — populated after the returned
-    DataFrame is acted on).
-    """
-    terms = list(dict.fromkeys(terms))
-    exclude = list(dict.fromkeys(exclude or []))
-    if must and not set(must) <= set(terms):
-        raise ValueError(
-            f"must clauses {sorted(set(must) - set(terms))} are not in terms; "
-            "must is a subset of the scored terms (add them to terms)"
-        )
-    stats = global_stats(index_dir)
-    dfs = term_dfs(spark, index_dir, terms)
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    require = (
-        set(dict.fromkeys(must)) if must else (set(terms) if mode == "and" else None)
-    )
-    if require and (not terms or any(t not in dfs for t in require)):
-        if metrics is not None:
-            metrics.update(decoded_blocks=0, total_blocks=0)
-        return empty
-    if not terms or all(t not in dfs for t in terms):
-        if metrics is not None:
-            metrics.update(decoded_blocks=0, total_blocks=0)
-        return empty
-    avgdl = stats["avgdl"]
-    idfs = {t: idf(stats["n_docs"], dfs.get(t, 0)) for t in terms}
-
-    acc_decoded = spark.sparkContext.accumulator(0)
-    acc_total = spark.sparkContext.accumulator(0)
-    if metrics is not None:
-        metrics["_acc"] = (acc_decoded, acc_total)
-
-    blocks = _postings_df(spark, index_dir, terms + exclude).select(
-        *_WAND_BLOCK_COLS
-    )
-    from ..index.deletes import deleted_ids as _del_ids
-
-    task = _make_wand_task(
-        terms, exclude, idfs, avgdl, k, require, round_to,
-        acc_decoded, acc_total, min_should_match=min_should_match,
-        deleted=_del_ids(index_dir),
-    )
-
-    def run(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        yield task(pd.concat(chunks, ignore_index=True))
-
-    return (
-        blocks.repartition(1)
-        .mapInPandas(run, "doc_id long, score double")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    Arguments as for ``bm25_topk_wand_parallel``."""
+    return bm25_topk_wand_parallel(
+        spark, index_dir, terms, mode, k, round_to=round_to, exclude=exclude,
+        n_tasks=1, metrics=metrics, must=must,
+        min_should_match=min_should_match,
     )
 
 
@@ -938,18 +773,20 @@ def bm25_route(
 ) -> dict:
     """Physical-plan choice for BM25 top-k, decided from the in-memory
     FST term dictionaries with ZERO Spark jobs (query/term_index.py).
-    Three plans, identical results:
+    Three routes over two plans, identical results:
 
-    - ``wand`` (bm25_topk_wand_exec): every candidate block to ONE
-      task. Right when the total payload is small: sum of df across
-      terms+exclude <= ``wand_max_df_sum`` (~2.5 bytes/posting packed).
-      A stopword query at 100 TB must never take this route.
-    - ``parallel`` (bm25_topk_wand_parallel): above the threshold when
-      at least one SCORING term is selective (min df over terms <=
-      threshold) — per-range block-max pruning then approaches the
-      global single-task ratio as ranges grow (range size >> k; see
-      the range-sizing note on the plan), with per-task memory bounded
-      to one range's blocks.
+    - ``wand``: the WAND plan with one range (bm25_topk_wand_exec,
+      n_tasks=1) — every candidate block to ONE task. Right when the
+      total payload is small: sum of df across terms+exclude <=
+      ``wand_max_df_sum`` (~2.5 bytes/posting packed). A stopword
+      query at 100 TB must never take this route.
+    - ``parallel``: the same plan with its derived range count
+      (bm25_topk_wand_parallel), above the threshold when at least one
+      SCORING term is selective (min df over terms <= threshold) —
+      per-range block-max pruning then approaches the global
+      single-task ratio as ranges grow (range size >> k; see the
+      range-sizing note on the plan), with per-task memory bounded to
+      one range's blocks.
     - ``indexed`` (bm25_topk_indexed): above the threshold with NO
       selective term (all-stopword query). Pruning is then provably
       hopeless (every block holds a top-k contender — measured ~100%
@@ -962,18 +799,15 @@ def bm25_route(
 
     dfs: optional precomputed term -> df (e.g. from a prefix/fuzzy
     expansion, which already walked the dictionaries) — skips the
-    per-term FST lookups.
+    FST lookups for those terms.
     """
-    from .term_index import seek_exact_mem
-
+    all_terms = list(dict.fromkeys(list(terms) + list(exclude or [])))
+    known = dict(dfs or {})
+    known.update(doc_freqs_mem(index_dir, [t for t in all_terms if t not in known]))
     df_sum = 0
     min_df = None
-    for t in dict.fromkeys(list(terms) + list(exclude or [])):
-        if dfs is not None and t in dfs:
-            df = int(dfs[t])
-        else:
-            hit = seek_exact_mem(index_dir, t)
-            df = hit["doc_freq"] if hit is not None else 0
+    for t in all_terms:
+        df = int(known.get(t, 0))
         df_sum += df
         # absent scoring terms (df 0) are NOT selective: they seed no
         # theta, so they must not pull a stopword query onto a pruning
@@ -1058,19 +892,15 @@ def bm25_topk_auto(
     route = bm25_route(index_dir, terms, exclude, wand_max_df_sum, dfs=dfs)
     if decision is not None:
         decision.update(route)
-    if route["plan"] == "wand":
-        return bm25_topk_wand_exec(
+    if route["plan"] == "indexed":
+        return bm25_topk_indexed(
             spark, index_dir, terms, mode, k, round_to=round_to,
             exclude=exclude, must=must, min_should_match=min_should_match,
         )
-    if route["plan"] == "parallel":
-        return bm25_topk_wand_parallel(
-            spark, index_dir, terms, mode, k, round_to=round_to,
-            exclude=exclude, must=must, min_should_match=min_should_match,
-        )
-    return bm25_topk_indexed(
-        spark, index_dir, terms, mode, k, round_to=round_to,
-        exclude=exclude, must=must, min_should_match=min_should_match,
+    return bm25_topk_wand_parallel(
+        spark, index_dir, terms, mode, k, round_to=round_to, exclude=exclude,
+        n_tasks=1 if route["plan"] == "wand" else None,
+        must=must, min_should_match=min_should_match,
     )
 
 
@@ -1087,20 +917,23 @@ def bm25_topk_wand_parallel(
     must: list[str] | None = None,
     min_should_match: int = 0,
 ) -> DataFrame:
-    """Doc-range-PARALLEL block-max WAND: the scale path for hot term
-    sets, sitting between the single-task WAND (best for small
-    candidate sets) and the distributed exhaustive scan (no pruning).
+    """Doc-range-PARALLEL block-max WAND — the one WAND plan. With
+    ``n_tasks=1`` (``bm25_topk_wand_exec``) it is the single-task plan
+    for small candidate sets; with the derived count it is the scale
+    path for hot term sets, between that and the distributed exhaustive
+    scan (no pruning).
 
     The doc space is cut into ``n_tasks`` contiguous ranges; every
     candidate block ships to each range its [first_doc, last_doc]
     intersects (hot/salted blocks are narrow — ~1 range each; only
     rare terms' wide blocks replicate). Each task runs the full pruning
     WAND clipped to its range (min_doc/max_doc: forward-only iterators
-    make the clip exact with no per-posting filtering) and returns its
-    LOCAL top-k; ranges partition the doc space, so every doc is scored
-    by exactly one task and the global top-k is the top-k of the union
-    (one tiny final sort over n_tasks*k rows). Per-task memory is the
-    blocks of one doc range — bounded however hot the query is.
+    make the clip exact with no per-posting filtering) with lazy decode
+    and returns its LOCAL top-k; ranges partition the doc space, so
+    every doc is scored by exactly one task and the global top-k is the
+    top-k of the union (one tiny final sort over n_tasks*k rows).
+    Per-task memory is the blocks of one doc range — bounded however
+    hot the query is; packed payloads never touch the driver.
 
     Range sizing: each range seeds its own theta, so pruning quality
     scales with docs-per-range (measured on the 100k-doc bench corpus,
@@ -1108,50 +941,35 @@ def bm25_topk_wand_parallel(
     global single task 37%). Default n_tasks therefore targets at
     least MIN_RANGE_DOCS docs per range, capped by the cluster's
     parallelism — at 10^12 docs the cap binds and ranges are huge, so
-    per-range pruning approaches the global ratio."""
-    terms = list(dict.fromkeys(terms))
-    exclude = list(dict.fromkeys(exclude or []))
-    if must and not set(must) <= set(terms):
-        raise ValueError(
-            f"must clauses {sorted(set(must) - set(terms))} are not in terms; "
-            "must is a subset of the scored terms (add them to terms)"
-        )
-    stats = global_stats(index_dir)
-    dfs = term_dfs(spark, index_dir, terms)
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    require = (
-        set(dict.fromkeys(must)) if must else (set(terms) if mode == "and" else None)
-    )
+    per-range pruning approaches the global ratio.
 
-    def empty_with_metrics():
+    exclude: NOT clause — a pure doc filter: a term in both terms and
+    exclude is scored AND its docs are dropped (the SQL oracle's NOT
+    IN), so the exclusion lists come from the full exclude set.
+
+    must: BooleanQuery must clauses (subset of ``terms``); the rest of
+    ``terms`` are should clauses. mode='and' is shorthand for
+    must=terms. (block_max_wand's require_all_terms handles mixed
+    must+should exactly: coverage-based pivots only consider the must
+    terms, should lists contribute score and bounds.)
+
+    metrics: optional dict to receive pruning counters (decoded_blocks /
+    total_blocks, via accumulators — populated by wand_metrics_value
+    after the returned DataFrame is acted on)."""
+    q = _prepare(index_dir, terms, mode, must)
+    # doc-span bounds for range sizing from the norms parquet footers,
+    # driver-side (milliseconds, no Spark job). The norms span covers
+    # every live doc, hence every block: any [lo, hi] covering all
+    # blocks yields the same exact union (ranges partition the doc
+    # space; per-range WAND is exact).
+    bounds = None if q.empty else seg.doc_bounds(index_dir)
+    if bounds is None:
         if metrics is not None:
             metrics.update(decoded_blocks=0, total_blocks=0)
-        return empty
-
-    if not terms or all(t not in dfs for t in terms):
-        return empty_with_metrics()
-    if require and any(t not in dfs for t in require):
-        return empty_with_metrics()
-    avgdl = stats["avgdl"]
-    idfs = {t: idf(stats["n_docs"], dfs.get(t, 0)) for t in terms}
-
-    blocks = _postings_df(spark, index_dir, terms + exclude).select(
-        *_WAND_BLOCK_COLS
-    )
-    # doc-span bounds for range sizing: read the segments' norms
-    # parquet FOOTER statistics driver-side (milliseconds) instead of
-    # running a Spark metadata-scan job per query (r9; the agg job was
-    # a full postings-metadata pass just for min/max). The norms span
-    # covers every live doc, hence every block: any [lo, hi] covering
-    # all blocks yields the same exact union (ranges partition the doc
-    # space; per-range WAND is exact). Falls back to the agg if the
-    # stats are unavailable.
-    bounds = _segment_doc_bounds(index_dir)
-    if bounds is None:
-        b_lo, b_hi = blocks.agg(F.min("first_doc"), F.max("last_doc")).first()
-        if b_lo is None:
-            return empty_with_metrics()
-        bounds = (int(b_lo), int(b_hi))
+        return _empty(spark)
+    terms, idfs, avgdl = q.terms, q.idfs, q.avgdl
+    require = set(q.require) or None
+    exclude = list(dict.fromkeys(exclude or []))
     lo, hi = bounds
     span = hi - lo + 1
     if n_tasks is None:
@@ -1161,6 +979,9 @@ def bm25_topk_wand_parallel(
         )
     n_tasks = max(1, min(n_tasks, span))
     width = -(-span // n_tasks)  # ceil
+    blocks = _postings_df(spark, index_dir, terms + exclude).select(
+        *_WAND_BLOCK_COLS
+    )
     rid_first = F.floor((F.col("first_doc") - lo) / width).cast("int")
     rid_last = F.floor((F.col("last_doc") - lo) / width).cast("int")
     fanned = blocks.withColumn(
@@ -1172,26 +993,63 @@ def bm25_topk_wand_parallel(
     if metrics is not None:
         metrics["_acc"] = (acc_decoded, acc_total)
 
-    from ..index.deletes import deleted_ids as _del_ids
-
-    task = _make_wand_task(
-        terms, exclude, idfs, avgdl, k, require, round_to,
-        acc_decoded, acc_total, min_should_match=min_should_match,
-        deleted=_del_ids(index_dir),
-    )
+    deleted = deleted_ids(index_dir)
+    inc_set, exc_set = set(terms), set(exclude)
 
     def run_range(pdf):
         rid = int(pdf["rid"].iloc[0])
-        return task(
-            pdf,
+        rows = [_WandBlock(*t) for t in zip(*(pdf[c] for c in _WAND_BLOCK_COLS))]
+        lists = build_posting_lists(
+            [r for r in rows if r.term in inc_set], idfs, avgdl
+        )
+        xlists = build_posting_lists(
+            [r for r in rows if r.term in exc_set],
+            {t: 0.0 for t in exc_set},
+            avgdl,
+        )
+        dset = DeletedDocSet(deleted) if deleted.size else None
+        out, m = block_max_wand(
+            lists, k, require_all_terms=require, round_to=round_to,
+            exclude_lists=xlists or None, term_order=terms,
             min_doc=lo + rid * width,
             max_doc=min(lo + (rid + 1) * width - 1, hi),
+            min_should_match=min_should_match,
+            exclude_doc_set=dset,
+        )
+        acc_decoded.add(int(m["decoded_blocks"]))
+        acc_total.add(int(m["total_blocks"]))
+        return pd.DataFrame(
+            {
+                "doc_id": pd.Series([d for d, _ in out], dtype="int64"),
+                "score": pd.Series([s for _, s in out], dtype="float64"),
+            }
         )
 
     locals_topk = fanned.groupBy("rid").applyInPandas(
         run_range, "doc_id long, score double"
     )
     return locals_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _topk_expansion(
+    spark: SparkSession,
+    index_dir: str,
+    stats: dict[str, tuple[int, int]],
+    k: int,
+    round_to: int | None,
+    wand_max_df_sum: int,
+) -> DataFrame:
+    """Auto-routed disjunctive BM25 over a multi-term expansion (term ->
+    (df, ttf) from the in-memory dictionaries): each matched term keeps
+    its own idf (boolean-rewrite semantics), and the router reuses the
+    expansion's dfs instead of looking them up again."""
+    if not stats:
+        return _empty(spark)
+    return bm25_topk_auto(
+        spark, index_dir, sorted(stats), "or", k, round_to=round_to,
+        wand_max_df_sum=wand_max_df_sum,
+        dfs={t: df for t, (df, _) in stats.items()},
+    )
 
 
 def bm25_topk_prefix(
@@ -1210,13 +1068,7 @@ def bm25_topk_prefix(
     from .term_index import prefix_stats_mem
 
     stats = prefix_stats_mem(index_dir, prefix)
-    if not stats:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return bm25_topk_auto(
-        spark, index_dir, sorted(stats), "or", k, round_to=round_to,
-        wand_max_df_sum=wand_max_df_sum,
-        dfs={t: df for t, (df, _) in stats.items()},  # router reuses these
-    )
+    return _topk_expansion(spark, index_dir, stats, k, round_to, wand_max_df_sum)
 
 
 def bm25_topk_fuzzy(
@@ -1236,13 +1088,7 @@ def bm25_topk_fuzzy(
     from .term_index import fuzzy_stats_mem
 
     stats = fuzzy_stats_mem(index_dir, term, max_edits)
-    if not stats:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return bm25_topk_auto(
-        spark, index_dir, sorted(stats), "or", k, round_to=round_to,
-        wand_max_df_sum=wand_max_df_sum,
-        dfs={t: df for t, (df, _) in stats.items()},
-    )
+    return _topk_expansion(spark, index_dir, stats, k, round_to, wand_max_df_sum)
 
 
 def bm25_topk_wildcard(
@@ -1260,13 +1106,7 @@ def bm25_topk_wildcard(
     from .term_index import wildcard_stats_mem
 
     stats = wildcard_stats_mem(index_dir, pattern)
-    if not stats:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return bm25_topk_auto(
-        spark, index_dir, sorted(stats), "or", k, round_to=round_to,
-        wand_max_df_sum=wand_max_df_sum,
-        dfs={t: df for t, (df, _) in stats.items()},
-    )
+    return _topk_expansion(spark, index_dir, stats, k, round_to, wand_max_df_sum)
 
 
 def term_stats_range(
@@ -1327,13 +1167,7 @@ def bm25_topk_regexp(
     from .term_index import regexp_stats_mem
 
     stats = regexp_stats_mem(index_dir, pattern)
-    if not stats:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return bm25_topk_auto(
-        spark, index_dir, sorted(stats), "or", k, round_to=round_to,
-        wand_max_df_sum=wand_max_df_sum,
-        dfs={t: df for t, (df, _) in stats.items()},
-    )
+    return _topk_expansion(spark, index_dir, stats, k, round_to, wand_max_df_sum)
 
 
 def more_like_this(
@@ -1358,7 +1192,6 @@ def more_like_this(
     in-memory dictionaries (zero Spark jobs); the only job before the
     final query fetches ONE source row."""
     from ..functions.analysis import tokens_col
-    from .term_index import seek_exact_mem
 
     row = (
         docs.filter(F.col(id_col) == doc_id)
@@ -1366,22 +1199,21 @@ def more_like_this(
         .collect()
     )
     if not row:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty(spark)
     from collections import Counter
 
     tfs = Counter(row[0].toks)
     stats = global_stats(index_dir)
-    scored_terms = []
-    for term, tf in tfs.items():
-        hit = seek_exact_mem(index_dir, term)
-        if hit is None:
-            continue
-        w = round(tf * idf(stats["n_docs"], hit["doc_freq"]), 6)
-        scored_terms.append((-w, term))
+    dfs = doc_freqs_mem(index_dir, tfs)
+    scored_terms = [
+        (-round(tf * idf(stats["n_docs"], dfs[term]), 6), term)
+        for term, tf in tfs.items()
+        if term in dfs
+    ]
     scored_terms.sort()
     sel = [t for _, t in scored_terms[:max_query_terms]]
     if not sel:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty(spark)
     return bm25_topk_auto(spark, index_dir, sorted(sel), "or", k, round_to=round_to)
 
 
@@ -1417,9 +1249,9 @@ def bm25_topk_phrase(
     if not words:
         raise ValueError("empty phrase")
     stats = global_stats(index_dir)
-    dfs = term_dfs(spark, index_dir, sorted(set(words)))
-    if any(t not in dfs for t in set(words)):
-        return spark.createDataFrame([], "doc_id long, score double")
+    dfs = doc_freqs_mem(index_dir, words)
+    if any(t not in dfs for t in words):
+        return _empty(spark)
     w = 0.0
     for t in dict.fromkeys(words):  # distinct terms, first-seen order
         w += idf(stats["n_docs"], dfs[t])

@@ -1,14 +1,16 @@
 """In-memory FST term dictionary for hot segments.
 
 The reference funnels every term lookup through its byte-array FST
-(/root/reference/codec/fst.ml:203-223 -> block_pointer.ml:9-41). Our
-default lookup path is the terms-parquet zone-map scan (a Spark job);
-this module is the promised in-memory variant: at segment open, the
-sorted terms table compiles into a minimal FST (fst/transducer.py,
-Daciuk/Mihov) mapping term -> ordinal, with df/ttf arrays aligned to
-the sort order. A hot segment's dictionary then answers seek_exact —
-including the common negative lookup — from executor/driver memory
-with ZERO Spark jobs.
+(codec/fst.ml:203-223 -> block_pointer.ml:9-41), and
+so does this engine: at segment open, the sorted terms table compiles
+into a minimal FST (fst/transducer.py, Daciuk/Mihov) mapping term ->
+ordinal, with df/ttf arrays aligned to the sort order. A segment's
+dictionary then answers seek_exact — including the common negative
+lookup — from executor/driver memory with ZERO Spark jobs. Every BM25
+plan, the plan router and MoreLikeThis take their per-term df from
+here (doc_freqs_mem); the terms parquet is read only to compile the
+FST, and the cache is keyed by the terms directory's fingerprint, so
+a rewritten segment never serves a stale df.
 
 Scale shape: one segment's vocabulary is Heaps-law bounded (~1M terms
 per 100M-doc segment); the FST byte array is a few MB and suffix
@@ -49,8 +51,8 @@ class TermIndex:
 _CACHE: dict[tuple, TermIndex] = {}
 
 
-def _dir_token(path: str) -> tuple:
-    """Cheap invalidator for the terms directory: (name, size, mtime_ns)
+def dir_token(path: str) -> tuple:
+    """Cheap invalidator for a segment directory: (name, size, mtime_ns)
     of every file. An in-place rebuild (e.g. the wipe-and-rebuild
     self-heal in __spark_entry__) changes it, so the cache can never
     serve stale df/ttf for a rewritten segment."""
@@ -77,7 +79,7 @@ def load_term_index(index_dir: str, segment: str) -> TermIndex:
     import pyarrow.parquet as pq
 
     path = seg.segment_paths(index_dir, segment)["terms"]
-    key = (path, _dir_token(path))
+    key = (path, dir_token(path))
     if key in _CACHE:
         return _CACHE[key]
     t = pq.read_table(path, columns=["term", "df", "ttf"])
@@ -96,6 +98,12 @@ def load_term_index(index_dir: str, segment: str) -> TermIndex:
         del _CACHE[k]
     _CACHE[key] = ti
     return ti
+
+
+def _accumulate(out: dict, term: str, ti: TermIndex, ordinal: int) -> None:
+    """Add one segment's (df, ttf) for ``term`` to the cross-segment sums."""
+    df, ttf = out.get(term, (0, 0))
+    out[term] = (df + int(ti.dfs[ordinal]), ttf + int(ti.ttfs[ordinal]))
 
 
 def all_stats_mem(index_dir: str) -> dict[str, tuple[int, int]]:
@@ -118,13 +126,7 @@ def prefix_stats_mem(index_dir: str, prefix: str) -> dict[str, tuple[int, int]]:
     for row in seg.list_segments(index_dir):
         ti = load_term_index(index_dir, row["segment"])
         for key, ordinal in ti.fst.prefix_items(p):
-            term = key.decode("utf-8")
-            df, ttf = int(ti.dfs[ordinal]), int(ti.ttfs[ordinal])
-            if term in out:
-                pdf, pttf = out[term]
-                out[term] = (pdf + df, pttf + ttf)
-            else:
-                out[term] = (df, ttf)
+            _accumulate(out, key.decode("utf-8"), ti, ordinal)
     return out
 
 
@@ -144,13 +146,7 @@ def range_stats_mem(
                 break  # sorted enumeration: nothing later can match
             if key < lo_b:
                 continue
-            term = key.decode("utf-8")
-            df, ttf = int(ti.dfs[ordinal]), int(ti.ttfs[ordinal])
-            if term in out:
-                pdf, pttf = out[term]
-                out[term] = (pdf + df, pttf + ttf)
-            else:
-                out[term] = (df, ttf)
+            _accumulate(out, key.decode("utf-8"), ti, ordinal)
     return out
 
 
@@ -185,12 +181,7 @@ def wildcard_stats_mem(
             term = key.decode("utf-8")
             if not rx.match(term):
                 continue
-            df, ttf = int(ti.dfs[ordinal]), int(ti.ttfs[ordinal])
-            if term in out:
-                pdf, pttf = out[term]
-                out[term] = (pdf + df, pttf + ttf)
-            else:
-                out[term] = (df, ttf)
+            _accumulate(out, term, ti, ordinal)
     return out
 
 
@@ -239,13 +230,7 @@ def fuzzy_stats_mem(
     for row in seg.list_segments(index_dir):
         ti = load_term_index(index_dir, row["segment"])
         for key, ordinal in ti.fst.levenshtein_items(term, max_edits):
-            t = key.decode("utf-8")
-            df, ttf = int(ti.dfs[ordinal]), int(ti.ttfs[ordinal])
-            if t in out:
-                pdf, pttf = out[t]
-                out[t] = (pdf + df, pttf + ttf)
-            else:
-                out[t] = (df, ttf)
+            _accumulate(out, key.decode("utf-8"), ti, ordinal)
     return out
 
 
@@ -293,13 +278,24 @@ def fuzzy_prefix_stats_mem(
     for row in seg.list_segments(index_dir):
         ti = load_term_index(index_dir, row["segment"])
         for key, ordinal in ti.fst.fuzzy_prefix_items(prefix, max_edits):
-            t = key.decode("utf-8")
-            df, ttf = int(ti.dfs[ordinal]), int(ti.ttfs[ordinal])
-            if t in out:
-                pdf, pttf = out[t]
-                out[t] = (pdf + df, pttf + ttf)
-            else:
-                out[t] = (df, ttf)
+            _accumulate(out, key.decode("utf-8"), ti, ordinal)
+    return out
+
+
+def doc_freqs_mem(index_dir: str, terms) -> dict[str, int]:
+    """term -> df summed across live segments for each of ``terms`` the
+    index holds (absent terms are left out): BM25's df input, from the
+    in-memory dictionaries with zero Spark jobs. Deleted docs still
+    count until a purging merge rewrites their segment (Lucene's
+    docFreq semantics)."""
+    terms = list(dict.fromkeys(terms))
+    out: dict[str, int] = {}
+    for row in seg.list_segments(index_dir):
+        ti = load_term_index(index_dir, row["segment"])
+        for t in terms:
+            hit = ti.seek_exact(t)
+            if hit is not None:
+                out[t] = out.get(t, 0) + hit[0]
     return out
 
 
@@ -399,10 +395,5 @@ def regexp_stats_mem(
             term = key.decode("utf-8")
             if not rx.fullmatch(term):
                 continue
-            df, ttf = int(ti.dfs[ordinal]), int(ti.ttfs[ordinal])
-            if term in out:
-                pdf, pttf = out[term]
-                out[term] = (pdf + df, pttf + ttf)
-            else:
-                out[term] = (df, ttf)
+            _accumulate(out, term, ti, ordinal)
     return out

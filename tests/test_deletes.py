@@ -35,8 +35,8 @@ def test_deletes_filter_all_plans_stats_unchanged(spark, built):
         count_matching_indexed,
         global_stats,
         matching_docs_indexed,
-        term_dfs,
     )
+    from ocaml_lucene_spark.query.term_index import doc_freqs_mem
 
     index_dir, oracle = built
     terms = sorted(oracle.term_stats(), key=lambda t: -oracle.term_stats()[t][0])[:2]
@@ -49,7 +49,7 @@ def test_deletes_filter_all_plans_stats_unchanged(spark, built):
 
     # stats unchanged (Lucene: docFreq includes deleted docs until merge)
     assert global_stats(index_dir)["n_docs"] == oracle.n_docs
-    assert term_dfs(spark, index_dir, terms)[terms[0]] == oracle.term_stats()[terms[0]][0]
+    assert doc_freqs_mem(index_dir, terms)[terms[0]] == oracle.term_stats()[terms[0]][0]
 
     got_ix = _top(bm25_topk_indexed(spark, index_dir, terms, "or", 10, round_to=4))
     got_wand = _top(bm25_topk_wand_exec(spark, index_dir, terms, "or", 10, round_to=4))

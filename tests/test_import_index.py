@@ -42,12 +42,12 @@ from ocaml_lucene_spark.interop.terms_block import (
 from ocaml_lucene_spark.oracle import OracleIndex
 from test_open_index import (
     CODEC_MAGIC,
-    GOLDEN_SI,
     SEG_ID,
     _fst_meta,
     _index_header,
     _string,
     _vint,
+    golden_bytes,
 )
 from test_reference_fixtures import _synth_segments_bytes
 from test_terms_block import _pointer
@@ -245,7 +245,7 @@ def _synth_lucene_dir(
                 _synth_segments_bytes(7, seg_name, [("commit", "one")], seg_id=SEG_ID)
             )
     with open(os.path.join(d, f"{seg_name}.si"), "wb") as f:
-        f.write(GOLDEN_SI)
+        f.write(golden_bytes("segment.si"))
     with open(os.path.join(d, f"{seg_name}.fnm"), "wb") as f:
         # DOCS_AND_FREQS_AND_POSITIONS = index 3 in INDEX_OPTIONS
         f.write(_synth_fnm([(FIELD, 0, 3)]))
@@ -260,7 +260,7 @@ def _synth_lucene_dir(
             f.write(blob)
     if norm_bytes is not None:
         # dense over the golden .si max_doc: absent docs get length 0
-        max_doc = 65460  # GOLDEN_SI doc_count (test_reference_fixtures)
+        max_doc = 65460  # the golden segment.si doc_count (test_reference_fixtures)
         dense = np.zeros(max_doc, dtype=np.int64)
         dense[: len(norm_bytes)] = norm_bytes
         nvd, nvm = write_norms([(0, dense)], SEG_ID, max_doc)

@@ -14,7 +14,11 @@ from pyspark.sql import functions as F
 
 from ocaml_lucene_spark.index.build import assign_doc_ids, build_index
 from ocaml_lucene_spark.oracle import OracleIndex
-from ocaml_lucene_spark.query.exec import bm25_topk_indexed, bm25_topk_wand
+from ocaml_lucene_spark.query.exec import (
+    bm25_topk_indexed,
+    bm25_topk_wand_exec,
+    wand_metrics_value,
+)
 from ocaml_lucene_spark.sources.corpus import generate_query_set
 
 
@@ -67,12 +71,20 @@ def test_indexed_exhaustive_rank_identity(spark, built):
             assert math.isclose(gs, es, rel_tol=1e-9), (q, gd, gs, es)
 
 
+def _wand(spark, index_dir, terms, mode, k):
+    """([(doc_id, score)], prune metrics) from the single-task WAND plan."""
+    metrics: dict = {}
+    df = bm25_topk_wand_exec(spark, index_dir, terms, mode, k, metrics=metrics)
+    got = [(r.doc_id, r.score) for r in df.collect()]
+    return got, wand_metrics_value(metrics)
+
+
 def test_wand_rank_identity_and_prunes(spark, built):
     index_dir, _, oracle = built
     total_decoded = total_blocks = 0
     for q in _queries():
         expected = oracle.query(q["terms"], q["mode"], q["k"])
-        got, metrics = bm25_topk_wand(spark, index_dir, q["terms"], q["mode"], q["k"])
+        got, metrics = _wand(spark, index_dir, q["terms"], q["mode"], q["k"])
         assert [d for d, _ in got] == [d for d, _ in expected], (q, got[:3], expected[:3])
         for (gd, gs), (_, es) in zip(got, expected):
             assert math.isclose(gs, es, rel_tol=1e-9), (q, gd, gs, es)
@@ -156,7 +168,7 @@ def test_contiguous_salting_prunes_blocks(spark, tiny_corpus, tmp_path_factory):
     """Doc-contiguous salt ranges keep each term's blocks doc-disjoint,
     so a rare+hot disjunction decodes a small fraction of the hot
     term's blocks (the round-1 hash salting decoded ~100%)."""
-    from ocaml_lucene_spark.query.exec import bm25_topk_wand, build_posting_lists
+    from ocaml_lucene_spark.query.exec import build_posting_lists
 
     index_dir = str(tmp_path_factory.mktemp("index_prune"))
     docs = assign_doc_ids(spark.read.parquet(tiny_corpus)).select("doc_id", "text")
@@ -164,7 +176,7 @@ def test_contiguous_salting_prunes_blocks(spark, tiny_corpus, tmp_path_factory):
     texts = {r.doc_id: r.text for r in assign_doc_ids(spark.read.parquet(tiny_corpus)).select("doc_id", "text").collect()}
     oracle = OracleIndex.from_texts(texts)
     # one posting list per term: contiguous salts -> doc-disjoint blocks
-    from ocaml_lucene_spark.query.exec import _postings_df, global_stats, term_dfs, idf
+    from ocaml_lucene_spark.query.exec import _postings_df, global_stats
 
     hot_term = max(oracle.term_stats().items(), key=lambda kv: kv[1][0])[0]
     rows = _postings_df(spark, index_dir, [hot_term]).select(
@@ -188,7 +200,7 @@ def test_contiguous_salting_prunes_blocks(spark, tiny_corpus, tmp_path_factory):
     )
     build_index(sdocs, idx2, n_partitions=8, salt_df_threshold=300, n_salts=4)
     oracle2 = OracleIndex.from_texts(texts2)
-    got, metrics = bm25_topk_wand(spark, idx2, ["needle", "hay"], "or", 3)
+    got, metrics = _wand(spark, idx2, ["needle", "hay"], "or", 3)
     expected = oracle2.query(["needle", "hay"], "or", 3)
     assert [d for d, _ in got] == [d for d, _ in expected]
     # hay has ~16 blocks; all but the needle-region ones must be skipped

@@ -15,7 +15,7 @@ from ocaml_lucene_spark.index.build import add_documents, assign_doc_ids, build_
 from ocaml_lucene_spark.index.merge import maybe_merge, merge_segments, select_merges
 from ocaml_lucene_spark.index.segments import list_segments
 from ocaml_lucene_spark.oracle import OracleIndex
-from ocaml_lucene_spark.query.exec import bm25_topk_indexed, bm25_topk_wand
+from ocaml_lucene_spark.query.exec import bm25_topk_indexed, bm25_topk_wand_exec
 from ocaml_lucene_spark.sources.corpus import generate_query_set
 
 
@@ -70,9 +70,9 @@ def test_merge_preserves_results(spark, multi):
     assert not (set(live_before[:2]) & names_after)
     _check(spark, index_dir, oracle)
     # WAND agrees post-merge too
-    got, _ = bm25_topk_wand(spark, index_dir, ["the", "and"], "or", 10)
+    got = bm25_topk_wand_exec(spark, index_dir, ["the", "and"], "or", 10).collect()
     exp = oracle.query(["the", "and"], "or", 10)
-    assert [d for d, _ in got] == [d for d, _ in exp]
+    assert [r.doc_id for r in got] == [d for d, _ in exp]
 
 
 def test_maybe_merge_to_single_segment(spark, multi):
@@ -80,6 +80,39 @@ def test_maybe_merge_to_single_segment(spark, multi):
     maybe_merge(spark, index_dir, merge_factor=2, n_partitions=4)
     assert len(list_segments(index_dir)) == 1
     _check(spark, index_dir, oracle, n_queries=8)
+
+
+def test_add_after_purging_merge_keeps_doc_ids_disjoint(spark, tiny_corpus, tmp_path_factory):
+    """A purging merge lowers the live doc count but not the highest
+    live doc id, so the next add must start above that id: doc ids stay
+    disjoint and the index still ranks like the oracle over the live
+    docs."""
+    from ocaml_lucene_spark.index.deletes import delete_docs
+    from ocaml_lucene_spark.index.segments import read_stats
+    from ocaml_lucene_spark.query.exec import norms_df
+
+    index_dir = str(tmp_path_factory.mktemp("index_add_after_purge"))
+    ranked = assign_doc_ids(spark.read.parquet(tiny_corpus).select("url", "text"))
+    first = ranked.filter(F.col("doc_id") < 300).select("url", "text")
+    later = ranked.filter(F.col("doc_id").between(300, 399)).select("url", "text")
+
+    add_documents(first, index_dir, n_partitions=4)
+    texts = {r.doc_id: r.text for r in assign_doc_ids(first).collect()}
+    victims = list(range(10, 30))  # below the highest id, which stays live
+    delete_docs(index_dir, victims)
+    for d in victims:
+        del texts[d]
+    merge_segments(spark, index_dir, [r["segment"] for r in list_segments(index_dir)])
+
+    row = add_documents(later, index_dir, n_partitions=4)
+    assert read_stats(index_dir, row["segment"])["doc_id_base"] == 300
+    for r in assign_doc_ids(later).collect():
+        texts[r.doc_id + 300] = r.text
+
+    ids = [r.doc_id for r in norms_df(spark, index_dir).collect()]
+    assert len(ids) == len(set(ids)) == 380
+    assert set(ids) == set(texts)
+    _check(spark, index_dir, OracleIndex.from_texts(texts))
 
 
 def test_select_merges_policy():

@@ -38,8 +38,18 @@ from test_reference_fixtures import _synth_segments_bytes
 from test_terms_block import _pointer
 
 DATA = Path("/root/reference/data")
-GOLDEN_SI = (DATA / "segment.si").read_bytes()
-GOLDEN_FNM = (DATA / "field_infos.fnm").read_bytes()
+
+
+def golden_bytes(name: str) -> bytes:
+    """A golden reference fixture's bytes, read on first use; skips the
+    calling test when the reference data is not present (as
+    test_reference_fixtures.py does) — never stands in other bytes."""
+    path = DATA / name
+    if not path.exists():
+        pytest.skip(f"reference fixture {name} not present")
+    return path.read_bytes()
+
+
 # the golden .si's 16-byte object id — the whole directory must agree
 # on it (segments_N entry, .tmd/.tim/.tip index headers)
 SEG_ID = bytes.fromhex("3d14dd1afc34bf8dc8bc3c5c972b3239")
@@ -192,9 +202,9 @@ def _synth_dir(
             7, "_0", [("commit", "one")], seg_id=seg_id_in_manifest
         ))
     with open(os.path.join(d, "_0.si"), "wb") as f:
-        f.write(GOLDEN_SI)
+        f.write(golden_bytes("segment.si"))
     with open(os.path.join(d, "_0.fnm"), "wb") as f:
-        f.write(GOLDEN_FNM)
+        f.write(golden_bytes("field_infos.fnm"))
     for ext, blob in (("tmd", tmd), ("tim", tim), ("tip", tip)):
         with open(os.path.join(d, f"_0_Lucene84_0.{ext}"), "wb") as f:
             f.write(bytes(blob))
