@@ -43,7 +43,11 @@ _CANON_ORDER = {
 def _canonical(fn):
     def run(spark, sf):
         df = fn(spark, sf)
-        return df.orderBy(*[F.col(c).asc_nulls_first() for c in df.columns])
+        out = df.orderBy(*[F.col(c).asc_nulls_first() for c in df.columns])
+        # keep the operator's staging persists releasable through the
+        # sort (dedup.unpersist_staging reads this attribute)
+        out._olspark_persisted = getattr(df, "_olspark_persisted", [])
+        return out
 
     return run
 

@@ -150,13 +150,8 @@ def build_at(cores: int, corpus: str, workdir: str) -> dict:
     n_parts = max(cores, n_docs_est // docs_per_part)
     cpu0 = _proc_tree_cpu()
     t0 = time.monotonic()
-    # OLSPARK_INT_TERM_IDS=1 shuffles integer term ids instead of term
-    # strings (byte-identical output; targets shuffle bytes — the
-    # measured single-host bottleneck is DRAM bandwidth)
-    int_ids = os.environ.get("OLSPARK_INT_TERM_IDS", "0") == "1"
     row = build_index(
         docs, idx, n_partitions=n_parts, salt_df_threshold=20_000, n_salts=8,
-        int_term_ids=int_ids,
     )
     elapsed = time.monotonic() - t0
     cpu_sec = max(_proc_tree_cpu() - cpu0, 0.0)
@@ -312,6 +307,7 @@ def main() -> None:
 
     import __spark_entry__ as entry
 
+    from ocaml_lucene_spark.operators import dedup
     from ocaml_lucene_spark.query.exec import (
         bm25_topk_indexed,
         bm25_topk_wand_exec,
@@ -399,8 +395,11 @@ def main() -> None:
         best = float("inf")
         for _ in range(reps):
             t0 = time.monotonic()
-            fn(spark, sf_dir).collect()
+            df = fn(spark, sf_dir)
+            df.collect()
             best = min(best, time.monotonic() - t0)
+            # release staging persists so the next rep recomputes them
+            dedup.unpersist_staging(df)
         queries[name] = round(best, 3)
 
     # WAND latency (executor-side task) + prune ratios via accumulators:

@@ -3,13 +3,15 @@
     read webtext -> assign deterministic global docIDs ->
     tokenize (JVM codegen; or Arrow UDF from raw html) ->
     explode -> per-(doc,term) tf [+ positions] (map-side partial agg) ->
-    df-driven hot-term salting -> repartitionByRange(term, salt)
-    [THE one mandatory shuffle] -> applyInPandas pack kernel
-    (numpy delta+FOR/PFOR blocks, term-sorted zstd parquet shard,
-    checkpoint row) -> terms/stats/manifest writes.
+    df-driven hot-term salting -> segments.write_segment: hash
+    repartition(term, salt) [THE one pack shuffle] -> JVM sort within
+    partitions -> mapInArrow pack kernel (numpy delta+FOR/PFOR blocks,
+    term-sorted parquet shard, checkpoint row) -> terms/stats/manifest
+    writes. Import (build_index_from_postings) and merge end in the
+    same writer.
 
 Scale design notes (100 TB, 1000 executors):
-- docID assignment is a range-shuffle on url + a driver exchange of
+- docID assignment is a hash shuffle on url + a driver exchange of
   per-partition counts (tiny), not a global row_number sort: ids are a
   pure function of the url set (BASELINE.json north_rule determinism).
 - tf aggregation happens map-side: all tokens of a doc live in one scan
@@ -36,7 +38,8 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.analysis import tokens_col
@@ -141,6 +144,52 @@ def assign_doc_ids(docs: DataFrame, id_partitions: int | None = None) -> DataFra
     return out
 
 
+def _write_norms(norms: DataFrame, path: str):
+    """Write the (doc_id, dl) norms with an Observation riding the same
+    job: returns the row of n_docs, sum_dl and the doc-id bounds (lo,
+    hi) that contiguous range salting needs. (Norms = Lucene's
+    doc-values file; writing it first is fine — it is independent of
+    the postings layout.)"""
+    obs = Observation("corpus_stats")
+    (
+        norms.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("dl").alias("sum_dl"),
+            F.min("doc_id").alias("lo"),
+            F.max("doc_id").alias("hi"),
+        )
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+    return obs.get
+
+
+def _with_salt(tf: DataFrame, hot: DataFrame, stats, n_salts: int) -> DataFrame:
+    """Attach the hot-term salt: rows of a term in ``hot`` get 1..n_salts,
+    the CONTIGUOUS doc-id range bucket of the norms' [lo, hi] span
+    (module docstring); every other row gets 0."""
+    lo, hi = stats["lo"], stats["hi"]
+    span = int(hi) - int(lo) + 1 if lo is not None else 1
+    return tf.join(F.broadcast(hot), "term", "left").withColumn(
+        "salt",
+        F.when(
+            F.col("_hot").isNotNull(),
+            F.least(
+                F.lit(n_salts),
+                (
+                    F.lit(1)
+                    + F.floor(
+                        (F.col("doc_id") - F.lit(int(lo or 0)))
+                        * F.lit(n_salts)
+                        / F.lit(span)
+                    )
+                ).cast("int"),
+            ),
+        ).otherwise(F.lit(0)),
+    ).drop("_hot")
+
+
 def build_index(
     docs: DataFrame,
     index_dir: str,
@@ -154,29 +203,15 @@ def build_index(
     text_col: str = "text",
     html_col: str | None = None,
     doc_id_base: int | None = None,
-    int_term_ids: bool = False,
-    max_int_id_vocab: int = 2_000_000,
-    tf_agg: str | None = None,
 ) -> dict:
     """Build one segment over ``docs`` (which must carry unique global
     ``id_col``; use assign_doc_ids first if absent). Returns the
     manifest row (with build metrics).
 
-    tf_agg: how per-(doc,term) tfs are computed on the plain path
-    (positions/offsets builds always use the shuffle agg).
-    - "shuffle" (default): JVM explode + hash aggregate — map-side
-      partial agg collapses duplicates, then ONE exchange on
-      (doc_id, term, dl) feeds the final agg. Two posting-volume
-      shuffles total (this one + the pack repartition).
-    - "local": an Arrow-batched pandas kernel — every token of a doc
-      lives in the doc's partition BY CONSTRUCTION (a doc is one row),
-      so per-doc tf needs NO exchange; Catalyst can't see that
-      invariant, the kernel can. ONE posting-volume shuffle total (the
-      pack repartition). The tokens DO cross the JVM->Python Arrow
-      boundary once, so this trades local serialization for shuffle
-      bytes — the right trade on a network-shuffle cluster; measured
-      locally in BASELINE.md. Env default: OLSPARK_TF_AGG."""
-    spark = docs.sparkSession
+    Per-(doc, term) tfs come from a JVM explode + hash aggregate: the
+    map-side partial agg collapses duplicates, then ONE exchange on
+    (doc_id, term, dl) feeds the final agg. Two posting-volume shuffles
+    in all: this one and the writer's pack repartition."""
     t0 = time.monotonic()
     profile = os.environ.get("OLSPARK_BUILD_PROFILE") == "1"
     marks: list[tuple[str, float]] = []
@@ -188,7 +223,6 @@ def build_index(
     generation = seg.next_generation(index_dir)
     segment = segment or f"seg{generation:06d}"
     paths = seg.segment_paths(index_dir, segment)
-    n_parts = n_partitions or spark.sparkContext.defaultParallelism
 
     if html_col is not None:
         # north-rule ingestion path: extract text from raw html with the
@@ -197,17 +231,15 @@ def build_index(
         from ..functions.analysis import extract_text_udf
 
         docs = docs.withColumn(text_col, extract_text_udf(F.col(html_col)))
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("toks")
-    ).withColumn("dl", F.size("toks").cast("long"))
+
     # tokenize once: hot-sample, postings, and norms all consume `base`.
     # MEMORY_AND_DISK in local/bench; on a 100 TB cluster this becomes a
-    # materialized staging table (or recompute, set persist_tokens=0).
-    persist_tokens = os.environ.get("OLSPARK_PERSIST_TOKENS", "1") != "0"
-    if persist_tokens:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # materialized staging table.
+    base = (
+        docs.select(F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("toks"))
+        .withColumn("dl", F.size("toks").cast("long"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
     if with_offsets:
         # .pay-analogue path: per-occurrence char start offsets ride
@@ -268,240 +300,42 @@ def build_index(
             )
         )
     else:
-        tf_agg = tf_agg or os.environ.get("OLSPARK_TF_AGG", "shuffle")
-        if tf_agg == "local":
-            # partition-local tf: zero-exchange aggregation (see the
-            # build_index docstring). Vectorized: one np.repeat for
-            # ids/dls, itertools.chain for the flat term stream, one
-            # C-level pandas groupby per Arrow batch.
-            def tf_part(batches):
-                from itertools import chain
-
-                import numpy as np
-                import pandas as pd
-
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    toks = pdf["toks"]
-                    sizes = pdf["dl"].to_numpy(dtype=np.int64)
-                    flat = np.array(list(chain.from_iterable(toks)), dtype=object)
-                    if not flat.size:
-                        continue
-                    g = (
-                        pd.DataFrame(
-                            {
-                                "doc_id": np.repeat(
-                                    pdf["doc_id"].to_numpy(dtype=np.int64), sizes
-                                ),
-                                "term": flat,
-                                "dl": np.repeat(sizes, sizes),
-                            }
-                        )
-                        .groupby(["doc_id", "term", "dl"], sort=False)
-                        .size()
-                        .reset_index(name="tf")
-                    )
-                    yield g
-
-            tf = base.mapInPandas(
-                tf_part, "doc_id long, term string, dl long, tf long"
-            )
-        else:
-            tf = (
-                base.select("doc_id", "dl", F.explode("toks").alias("term"))
-                .groupBy("doc_id", "term", "dl")
-                .agg(F.count("*").cast("long").alias("tf"))
-            )
-
-    # ONE up-front pass: write norms (doc_id, dl) with the Observation
-    # riding the same job collecting corpus stats AND the doc-id bounds
-    # needed for contiguous range salting. With persist on, this pass
-    # also fills the token cache; afterwards no other job tokenizes the
-    # full corpus. (Norms = Lucene's doc-values file; writing it first
-    # is fine — it is independent of the postings layout.)
-    from pyspark.sql import Observation
-
-    obs = Observation("corpus_stats")
-    (
-        base.select("doc_id", "dl")
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").alias("sum_dl"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
+        tf = (
+            base.select("doc_id", "dl", F.explode("toks").alias("term"))
+            .groupBy("doc_id", "term", "dl")
+            .agg(F.count("*").cast("long").alias("tf"))
         )
-        .write.mode("overwrite")
-        .parquet(paths["norms"])
-    )
-    agg_row = obs.get
-    b_lo, b_hi = agg_row["lo"], agg_row["hi"]
-    span = int(b_hi) - int(b_lo) + 1 if b_lo is not None else 1
+
+    # ONE up-front pass: the norms write also fills the token cache;
+    # afterwards no other job tokenizes the full corpus.
+    corpus = _write_norms(base.select("doc_id", "dl"), paths["norms"])
     mark("norms+stats+bounds (one tokenize pass)")
 
     # hot-term detection from a small deterministic sample: a term with
     # true df > threshold shows df_sample ≈ df * frac (threshold scaled
-    # accordingly), so one cheap 2% pass finds the Zipfian head — never
-    # a second full pass over the corpus. The hot list is vocabulary-
-    # bounded and broadcast. The sample sits BELOW the tokenizer when
-    # the token cache is off, so only the sampled docs tokenize.
+    # accordingly), so one cheap 2% pass over the cached tokens finds
+    # the Zipfian head — never a second full pass over the corpus. The
+    # hot list is vocabulary-bounded and broadcast.
     sample_frac = float(os.environ.get("OLSPARK_SALT_SAMPLE_FRAC", "0.02"))
-    if persist_tokens:
-        hot_src = base.sample(fraction=sample_frac, seed=7)
-    else:
-        hot_src = docs.sample(fraction=sample_frac, seed=7).select(
-            F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("toks")
-        )
     hot = (
-        hot_src.select("doc_id", F.explode_outer("toks").alias("term"))
+        base.sample(fraction=sample_frac, seed=7)
+        .select("doc_id", F.explode_outer("toks").alias("term"))
         .groupBy("term")
         .agg(F.approx_count_distinct("doc_id").alias("df_s"))  # HLL: one
         # pass, no expand — exact counts are wasted on a threshold test
         .filter(F.col("df_s") > salt_df_threshold * sample_frac)
         .select("term", F.lit(1).alias("_hot"))
     )
-
-    # ---- global term dictionary (int ids) ---------------------------
-    # THE shuffle below carries one row per (doc, term) posting; the
-    # term STRING is its widest column (~16-24 of ~60 UnsafeRow bytes)
-    # and forces string comparisons in the Tungsten sort. A dense int
-    # id — the term's rank in the SORTED vocabulary, so tid order ==
-    # term order and the term-sorted shard layout is unchanged — cuts
-    # shuffle bytes ~25-30% and turns the sort into a radix sort. The
-    # mapping is a pure function of the term SET (rank in sorted order),
-    # so resume fingerprints stay deterministic; the kernel reconstructs
-    # strings from the broadcast vocabulary, so shard bytes are
-    # IDENTICAL to a string-shuffle build (tested). The dictionary also
-    # absorbs the hot-term flag, so the postings stream crosses ONE
-    # broadcast join, not two.
-    #
-    # Scale bound: the vocabulary is Heaps-law bounded but broadcast +
-    # driver-collected here, so above ``max_int_id_vocab`` terms the
-    # build falls back to the string shuffle (at 100 TB with ~10^8+
-    # distinct tokens the dict join would itself need a shuffle, which
-    # defeats the purpose). One extra vocabulary pass runs over the
-    # cached token arrays (map-side partial distinct -> tiny shuffle).
-    #
-    # Default OFF for single-JVM/local builds — MEASURED on this host
-    # (paired A/B, 100k docs): the vocabulary pass (~1.2 s @ 8 cores)
-    # slightly exceeds what the byte savings return when the shuffle is
-    # memory-local (net -3..5% at local[8], neutral at local[2]). On a
-    # real cluster the shuffle crosses the NETWORK and reducers sort
-    # spilled runs, where ~27% fewer row bytes and a radix (int) sort
-    # are the win — enable it there. Byte-identical outputs under both
-    # settings are pinned by test_int_term_id_shuffle_byte_identical.
-    bc_vocab = None
-    if int_term_ids:
-        vocab_src = (
-            base.select(F.explode("toks").alias("term"))
-            if persist_tokens
-            else tf.select("term")
-        )
-        vocab_df = vocab_src.distinct().persist()
-        n_vocab = vocab_df.count()
-        if n_vocab <= max_int_id_vocab:
-            terms_sorted = [r.term for r in vocab_df.orderBy("term").collect()]
-            import numpy as _np
-            import pandas as _pd
-            import pyarrow as _pa
-
-            bc_vocab = spark.sparkContext.broadcast(
-                _pa.array(terms_sorted, type=_pa.string())
-            )
-            hot_set = {r.term for r in hot.collect()}  # vocabulary-bounded
-            dict_df = spark.createDataFrame(
-                _pd.DataFrame(
-                    {
-                        "term": _pd.Series(terms_sorted, dtype=object),
-                        "tid": _np.arange(len(terms_sorted), dtype=_np.int64),
-                        "_hot": _np.array(
-                            [t in hot_set for t in terms_sorted], dtype=bool
-                        ),
-                    }
-                ),
-                schema="term string, tid long, _hot boolean",
-            )
-            tf = tf.join(F.broadcast(dict_df), "term").drop("term")
-        vocab_df.unpersist()
-    if bc_vocab is None:
-        tf = tf.join(F.broadcast(hot), "term", "left")
-    term_key = "term" if bc_vocab is None else "tid"
+    tf = _with_salt(tf, hot, corpus, n_salts)
     mark("term_dictionary")
 
-    hot_cond = (
-        F.col("_hot") if bc_vocab is not None else F.col("_hot").isNotNull()
+    manifest_row = seg.write_segment(
+        tf, index_dir, segment, generation,
+        n_docs=int(corpus["n_docs"]), sum_dl=int(corpus["sum_dl"]),
+        source="build", started=t0, with_positions=with_positions,
+        with_offsets=with_offsets, n_partitions=n_partitions,
+        doc_id_base=doc_id_base, mark=mark,
     )
-    tf = tf.withColumn(
-        "salt",
-        F.when(
-            hot_cond,
-            F.least(
-                F.lit(n_salts),
-                (
-                    F.lit(1)
-                    + F.floor(
-                        (F.col("doc_id") - F.lit(int(b_lo or 0)))
-                        * F.lit(n_salts)
-                        / F.lit(span)
-                    )
-                ).cast("int"),
-            ),
-        ).otherwise(F.lit(0)),
-    ).drop("_hot")
-
-    # THE shuffle: hash-partition on (term-or-tid, salt). Hash (not
-    # range) because resume requires partition contents to be a pure
-    # function of the data — repartitionByRange samples boundaries with
-    # a run-varying seed, which would invalidate checkpoint fingerprints.
-    # The pack kernel term-sorts within each shard, so parquet row-group
-    # min/max term stats (zone maps) still prune point lookups to ~one
-    # row group per shard; hot terms spread across n_salts partitions.
-    # sort in the JVM (Tungsten sort, radix on the shuffled rows) — a
-    # pandas object-dtype string sort in the kernel costs more than the
-    # packing itself; the kernel verifies order and skips its own sort
-    shuffled = (
-        tf.repartition(n_parts, term_key, "salt")
-        .sortWithinPartitions(term_key, "salt", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-    )
-
-    def pack_iter(batches):
-        # Arrow end to end: concat of record batches is buffer reuse,
-        # not a pandas object-string copy (whole partition bounded by
-        # n_parts sizing)
-        import pyarrow as pa
-
-        chunks = list(batches)
-        if not chunks:
-            return
-        rb = seg.pack_table(
-            pa.Table.from_batches(chunks),
-            segment, paths["postings"], paths["checkpoints"], with_positions,
-            with_offsets=with_offsets,
-            vocab=bc_vocab.value if bc_vocab is not None else None,
-        )
-        if rb is not None:
-            yield rb
-
-    ckpts = shuffled.mapInArrow(pack_iter, seg.CHECKPOINT_SCHEMA)
-    ckpt_rows = ckpts.collect()  # small: one row per partition (lineage table)
-    mark("shuffle+pack")
-
-    # per-term stats (term, df, ttf) — terms dict .tmd analogue, computed
-    # from the packed blocks' METADATA columns (no re-tokenize, and the
-    # binary payload columns are pruned from the scan)
-    (
-        spark.read.parquet(paths["postings"])
-        .groupBy("term")
-        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"))
-        .repartitionByRange(max(n_parts // 4, 1), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(paths["terms"])
-    )
-    mark("terms_stats")
-    agg = type("S", (), {"n_docs": agg_row["n_docs"], "sum_dl": agg_row["sum_dl"]})
     if profile:
         import sys
 
@@ -509,48 +343,7 @@ def build_index(
         for label, at in marks:
             print(f"[build-profile] {label}: +{at - prev:.2f}s (t={at:.2f})", file=sys.stderr)
             prev = at
-
-    stats = {
-        "segment": segment,
-        "n_docs": int(agg.n_docs),
-        "sum_dl": int(agg.sum_dl),
-        "avgdl": agg.sum_dl / agg.n_docs if agg.n_docs else 0.0,
-        "with_positions": with_positions,
-        "with_offsets": with_offsets,
-        "index_options": (
-            "DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS"
-            if with_offsets
-            else "DOCS_AND_FREQS_AND_POSITIONS"
-            if with_positions
-            else "DOCS_AND_FREQS"
-        ),
-        "doc_id_base": doc_id_base,
-    }
-    seg.write_stats(index_dir, segment, stats)
-
-    elapsed = time.monotonic() - t0
-    n_postings = sum(r.n_postings or 0 for r in ckpt_rows)
-    bytes_packed = sum(r.bytes_packed or 0 for r in ckpt_rows)
-    manifest_row = {
-        "segment": segment,
-        "generation": generation,
-        "status": "live",
-        "n_docs": int(agg.n_docs),
-        "sum_dl": int(agg.sum_dl),
-        "n_postings": int(n_postings),
-        "bytes_packed": int(bytes_packed),
-        "n_partitions": len(ckpt_rows),
-        "elapsed_sec": elapsed,
-        "docs_per_sec": agg.n_docs / elapsed if elapsed else 0.0,
-        "postings_per_sec": n_postings / elapsed if elapsed else 0.0,
-        "source": "build",
-        "resumed_partitions": sum(
-            1 for r in ckpt_rows if r.status == "skipped_checkpoint"
-        ),
-    }
-    seg.write_manifest_row(index_dir, manifest_row)
-    if persist_tokens:
-        base.unpersist()
+    base.unpersist()
     return manifest_row
 
 
@@ -579,45 +372,23 @@ def build_index_from_postings(
     count only posting-bearing docs (documented divergence from
     Lucene's maxDoc, which counts empty docs too).
 
-    Same scale shape as build_index from the tf stage on: one posting-
-    volume shuffle on (term, salt) into the pack kernel, df-driven
-    contiguous-range hot-term salting, map-side partial aggs for
-    norms/hot detection. The extra dl join (build_index carries dl
+    Same scale shape as build_index from the tf stage on: the same
+    salting and the same segment writer, with map-side partial aggs
+    for norms/hot detection. The extra dl join (build_index carries dl
     inline from the tokenizer) is one doc-keyed shuffle of the
     postings; AQE broadcast-joins it when the norms side is small."""
-    spark = postings.sparkSession
     t0 = time.monotonic()
-    with_positions = "positions" in postings.columns
     generation = seg.next_generation(index_dir)
     segment = segment or f"seg{generation:06d}"
     paths = seg.segment_paths(index_dir, segment)
-    n_parts = n_partitions or spark.sparkContext.defaultParallelism
-
-    from pyspark import StorageLevel
 
     # three consumers (norms, hot detection, the pack shuffle) — same
     # staging rationale as build_index's token cache
     postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-
-    from pyspark.sql import Observation
-
-    obs = Observation("corpus_stats")
-    (
-        postings.groupBy("doc_id")
-        .agg(F.sum("tf").cast("long").alias("dl"))
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").alias("sum_dl"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-        )
-        .write.mode("overwrite")
-        .parquet(paths["norms"])
+    corpus = _write_norms(
+        postings.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl")),
+        paths["norms"],
     )
-    agg_row = obs.get
-    b_lo, b_hi = agg_row["lo"], agg_row["hi"]
-    span = int(b_hi) - int(b_lo) + 1 if b_lo is not None else 1
 
     # exact hot-term dfs: the (doc, term) collapse already happened
     # upstream, so df is a plain count — no sampling pass needed
@@ -627,96 +398,17 @@ def build_index_from_postings(
         .filter(F.col("df") > salt_df_threshold)
         .select("term", F.lit(1).alias("_hot"))
     )
-
-    tf = postings.join(
-        spark.read.parquet(paths["norms"]), "doc_id"
-    ).join(F.broadcast(hot), "term", "left")
-    tf = tf.withColumn(
-        "salt",
-        F.when(
-            F.col("_hot").isNotNull(),
-            F.least(
-                F.lit(n_salts),
-                (
-                    F.lit(1)
-                    + F.floor(
-                        (F.col("doc_id") - F.lit(int(b_lo or 0)))
-                        * F.lit(n_salts)
-                        / F.lit(span)
-                    )
-                ).cast("int"),
-            ),
-        ).otherwise(F.lit(0)),
-    ).drop("_hot")
-
-    # THE shuffle: hash on (term, salt), JVM sort within partitions —
-    # identical contract to build_index (hash, not range, so resume
-    # fingerprints stay a pure function of the data)
-    shuffled = (
-        tf.repartition(n_parts, "term", "salt")
-        .sortWithinPartitions("term", "salt", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
+    tf = _with_salt(
+        postings.join(postings.sparkSession.read.parquet(paths["norms"]), "doc_id"),
+        hot, corpus, n_salts,
     )
-
-    def pack_iter(batches):
-        import pyarrow as pa
-
-        chunks = list(batches)
-        if not chunks:
-            return
-        rb = seg.pack_table(
-            pa.Table.from_batches(chunks),
-            segment, paths["postings"], paths["checkpoints"], with_positions,
-        )
-        if rb is not None:
-            yield rb
-
-    ckpt_rows = shuffled.mapInArrow(pack_iter, seg.CHECKPOINT_SCHEMA).collect()
-
-    (
-        spark.read.parquet(paths["postings"])
-        .groupBy("term")
-        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"))
-        .repartitionByRange(max(n_parts // 4, 1), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(paths["terms"])
+    manifest_row = seg.write_segment(
+        tf, index_dir, segment, generation,
+        n_docs=int(corpus["n_docs"]), sum_dl=int(corpus["sum_dl"]),
+        source=source, started=t0,
+        with_positions="positions" in postings.columns,
+        n_partitions=n_partitions,
     )
-
-    stats = {
-        "segment": segment,
-        "n_docs": int(agg_row["n_docs"]),
-        "sum_dl": int(agg_row["sum_dl"]),
-        "avgdl": agg_row["sum_dl"] / agg_row["n_docs"] if agg_row["n_docs"] else 0.0,
-        "with_positions": with_positions,
-        "with_offsets": False,
-        "index_options": (
-            "DOCS_AND_FREQS_AND_POSITIONS" if with_positions else "DOCS_AND_FREQS"
-        ),
-        "doc_id_base": None,
-    }
-    seg.write_stats(index_dir, segment, stats)
-
-    elapsed = time.monotonic() - t0
-    n_postings = sum(r.n_postings or 0 for r in ckpt_rows)
-    manifest_row = {
-        "segment": segment,
-        "generation": generation,
-        "status": "live",
-        "n_docs": int(agg_row["n_docs"]),
-        "sum_dl": int(agg_row["sum_dl"]),
-        "n_postings": int(n_postings),
-        "bytes_packed": int(sum(r.bytes_packed or 0 for r in ckpt_rows)),
-        "n_partitions": len(ckpt_rows),
-        "elapsed_sec": elapsed,
-        "docs_per_sec": agg_row["n_docs"] / elapsed if elapsed else 0.0,
-        "postings_per_sec": n_postings / elapsed if elapsed else 0.0,
-        "source": source,
-        "resumed_partitions": sum(
-            1 for r in ckpt_rows if r.status == "skipped_checkpoint"
-        ),
-    }
-    seg.write_manifest_row(index_dir, manifest_row)
     postings.unpersist()
     return manifest_row
 

@@ -6,13 +6,14 @@ merge itself, mirroring Lucene's TieredMergePolicy: segments are
 grouped into size tiers and the smallest ``merge_factor`` segments of
 an over-full tier are merged into one.
 
-Merge = decode candidate segments' blocks (mapInPandas numpy) ->
-one hash shuffle on (term, salt) bounded to the merged segments' data
--> re-pack with the same kernel as build -> new segment + manifest
-rows marking sources 'merged'. Because docIDs are global and BM25
-stats aggregate across live segments, queries are invariant under
-merge (tested) — merge is purely a layout/locality operation, exactly
-like Lucene's.
+Merge = decode candidate segments' blocks (mapInPandas numpy, dropping
+deleted docs and re-bucketing salted rows over the merged doc span) ->
+union of the source norms -> segments.write_segment, the same writer
+build and import end in (one hash shuffle on (term, salt), JVM sort,
+mapInArrow pack) -> new segment + manifest rows marking sources
+'merged'. Because docIDs are global and BM25 stats aggregate across
+live segments, queries are invariant under merge (tested) — merge is
+purely a layout/locality operation, exactly like Lucene's.
 """
 
 from __future__ import annotations
@@ -72,7 +73,6 @@ def merge_segments(
     deleted = del_mod.deleted_ids(index_dir) if purge_deleted else None
     if deleted is not None and not deleted.size:
         deleted = None
-    n_parts = n_partitions or spark.sparkContext.defaultParallelism
     rows = {r["segment"]: r for r in seg.list_segments(index_dir, live_only=False)}
     sources = [rows[s] for s in segment_names]
     # Lucene-style lowest-common index options: a merge group mixing
@@ -166,33 +166,7 @@ def merge_segments(
     new_name = f"merged{generation:06d}"
     paths = seg.segment_paths(index_dir, new_name)
 
-    shuffled = postings.repartition(n_parts, "term", "salt").withColumn(
-        "pid", F.spark_partition_id()
-    )
-
-    def pack_iter(batches):
-        import pandas as pd
-
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        yield seg.pack_partition(
-            pdf, new_name, paths["postings"], paths["checkpoints"], with_positions,
-            with_offsets=with_offsets,
-        )
-
-    ckpt_rows = shuffled.mapInPandas(pack_iter, seg.CHECKPOINT_SCHEMA).collect()
-
-    # terms stats from packed metadata; norms = union of source norms
-    (
-        spark.read.parquet(paths["postings"])
-        .groupBy("term")
-        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"))
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(paths["terms"])
-    )
+    # norms = union of source norms
     norm_paths = [seg.segment_paths(index_dir, s)["norms"] for s in segment_names]
     norms_src = spark.read.parquet(*norm_paths)
     purged_ids: list[int] = []
@@ -215,44 +189,12 @@ def merge_segments(
     else:
         n_docs = sum(r["n_docs"] for r in sources)
         sum_dl = sum(r["sum_dl"] for r in sources)
-    seg.write_stats(
-        index_dir,
-        new_name,
-        {
-            "segment": new_name,
-            "n_docs": n_docs,
-            "sum_dl": sum_dl,
-            "avgdl": sum_dl / n_docs if n_docs else 0.0,
-            "with_positions": with_positions,
-            "with_offsets": with_offsets,
-            "index_options": (
-                "DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS"
-                if with_offsets
-                else "DOCS_AND_FREQS_AND_POSITIONS"
-                if with_positions
-                else "DOCS_AND_FREQS"
-            ),
-            "merged_from": segment_names,
-        },
+    manifest_row = seg.write_segment(
+        postings, index_dir, new_name, generation,
+        n_docs=n_docs, sum_dl=sum_dl, source="merge", started=t0,
+        with_positions=with_positions, with_offsets=with_offsets,
+        n_partitions=n_partitions, merged_from=segment_names,
     )
-    elapsed = time.monotonic() - t0
-    n_postings = sum(r.n_postings or 0 for r in ckpt_rows)
-    manifest_row = {
-        "segment": new_name,
-        "generation": generation,
-        "status": "live",
-        "n_docs": n_docs,
-        "sum_dl": sum_dl,
-        "n_postings": int(n_postings),
-        "bytes_packed": int(sum(r.bytes_packed or 0 for r in ckpt_rows)),
-        "n_partitions": len(ckpt_rows),
-        "elapsed_sec": elapsed,
-        "docs_per_sec": n_docs / elapsed if elapsed else 0.0,
-        "postings_per_sec": n_postings / elapsed if elapsed else 0.0,
-        "source": "merge",
-        "merged_from": segment_names,
-    }
-    seg.write_manifest_row(index_dir, manifest_row)
     if purged_ids:
         # purged ids are physically gone: rewrite the deletes files
         # keeping only ids that still exist in NON-merged segments

@@ -37,7 +37,6 @@ import time
 import uuid
 
 import numpy as np
-import pandas as pd
 
 POSTINGS_SCHEMA = (
     "term string, block_no int, n int, first_doc long, last_doc long, "
@@ -91,20 +90,12 @@ def pack_table(
     checkpoint_dir: str,
     with_positions: bool,
     with_offsets: bool = False,
-    vocab=None,
 ):
-    """Arrow-native pack kernel (runs under mapInArrow): one shuffle
-    partition of (term, salt, doc_id, tf, dl[, positions], pid) rows ->
-    packed block rows written as a term-sorted parquet shard + one
-    checkpoint/metrics RecordBatch returned (None for an empty input).
-
-    vocab: optional pyarrow StringArray mapping tid -> term. When given
-    (int-term-id build path), the input carries a ``tid`` int column
-    instead of ``term``; tids are ranks in the SORTED vocabulary, so
-    tid order == term order, and the kernel reconstructs the string
-    column with one Arrow take — the written shard (and the content
-    fingerprint, which hashes the reconstructed strings) is
-    byte-identical to a string-shuffle build of the same rows (tested).
+    """Arrow-native pack kernel (runs under mapInArrow in
+    ``write_segment``): one shuffle partition of (term, salt, doc_id,
+    tf, dl[, positions][, starts], pid) rows -> packed block rows
+    written as a term-sorted parquet shard + one checkpoint/metrics
+    RecordBatch returned (None for an empty input).
 
     Arrow end to end: term strings stay in Arrow buffers (never
     materialized as Python str objects — the pandas object-string heap
@@ -137,21 +128,12 @@ def pack_table(
         return c.chunk(0) if isinstance(c, pa.ChunkedArray) else c
 
     pid = int(col("pid")[0].as_py())
-    use_tids = vocab is not None and "tid" in table.schema.names
-    term_key = "tid" if use_tids else "term"
     doc_ids = col("doc_id").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     salts = col("salt").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
 
     def term_meta():
         """(terms StringArray, term_eq bool[n-1], terms_ok) for the
-        current table order; int-id inputs compare tids (radix-cheap)
-        and reconstruct the string column with one Arrow take."""
-        if use_tids:
-            tids = col("tid").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            t = vocab.take(pa.array(tids, type=pa.int64()))
-            eq = tids[1:] == tids[:-1] if n > 1 else np.zeros(0, dtype=bool)
-            ok = bool((np.diff(tids) >= 0).all()) if n > 1 else True
-            return t, eq, ok
+        current table order."""
         t = col("term")
         if n > 1:
             hi, lo = t.slice(1), t.slice(0, n - 1)
@@ -173,7 +155,7 @@ def pack_table(
         idx = pc.sort_indices(
             table,
             sort_keys=[
-                (term_key, "ascending"), ("salt", "ascending"), ("doc_id", "ascending"),
+                ("term", "ascending"), ("salt", "ascending"), ("doc_id", "ascending"),
             ],
         )
         table = table.take(idx).combine_chunks()
@@ -339,28 +321,140 @@ def _checkpoint_batch(row: dict):
     return pa.RecordBatch.from_pylist([row], schema=schema)
 
 
-def pack_partition(
-    pdf: pd.DataFrame,
+def write_segment(
+    postings,
+    index_dir: str,
     segment: str,
-    postings_dir: str,
-    checkpoint_dir: str,
-    with_positions: bool,
+    generation: int,
+    *,
+    n_docs: int,
+    sum_dl: int,
+    source: str,
+    started: float,
+    with_positions: bool = False,
     with_offsets: bool = False,
-) -> pd.DataFrame:
-    """pandas wrapper over ``pack_table`` (mapInPandas callers, e.g.
-    merge). Fingerprints are identical to the Arrow path."""
-    import pyarrow as pa
+    n_partitions: int | None = None,
+    doc_id_base: int | None = None,
+    merged_from: list[str] | None = None,
+    mark=None,
+) -> dict:
+    """The one segment writer: build, import and merge all end here, so
+    a segment's bytes never depend on what produced its postings
+    (Lucene's flush and SegmentMerger share one postings writer the
+    same way).
 
-    if len(pdf) == 0:
-        return pd.DataFrame(
-            columns=[c.split(" ")[0] for c in CHECKPOINT_SCHEMA.split(", ")]
-        )
-    table = pa.Table.from_pandas(pdf, preserve_index=False)
-    rb = pack_table(
-        table, segment, postings_dir, checkpoint_dir, with_positions,
-        with_offsets=with_offsets,
+    ``postings``: (term, salt, doc_id, tf, dl[, positions][, starts])
+    with one row per (term, doc); ``salt`` is the hot-term doc-range
+    bucket (0 = unsalted). The norms are the caller's: ``n_docs`` and
+    ``sum_dl`` describe them. Writes the packed postings, the terms
+    stats, stats.json and the manifest row, and returns the row. A
+    merge records ``merged_from`` where a build records its
+    ``doc_id_base`` and resumed partition count. ``mark(label)`` is
+    called after the pack and after the terms write (build profile).
+    ``started`` is the caller's time.monotonic() start, for the row's
+    elapsed and rate fields."""
+    from pyspark.sql import functions as F
+
+    spark = postings.sparkSession
+    paths = segment_paths(index_dir, segment)
+    n_parts = n_partitions or spark.sparkContext.defaultParallelism
+
+    # THE shuffle: hash-partition on (term, salt). Hash (not range)
+    # because resume requires partition contents to be a pure function
+    # of the data — repartitionByRange samples boundaries with a
+    # run-varying seed, which would invalidate checkpoint fingerprints.
+    # The pack kernel term-sorts within each shard, so parquet row-group
+    # min/max term stats (zone maps) still prune point lookups to ~one
+    # row group per shard; hot terms spread across n_salts partitions.
+    # Sort in the JVM (Tungsten sort on the shuffled rows) — a string
+    # sort in the kernel costs more than the packing itself; the kernel
+    # verifies order and skips its own sort.
+    shuffled = (
+        postings.repartition(n_parts, "term", "salt")
+        .sortWithinPartitions("term", "salt", "doc_id")
+        .withColumn("pid", F.spark_partition_id())
     )
-    return rb.to_pandas()
+
+    def pack_iter(batches):
+        # Arrow end to end: concat of record batches is buffer reuse,
+        # not a pandas object-string copy (whole partition bounded by
+        # n_parts sizing)
+        import pyarrow as pa
+
+        chunks = list(batches)
+        if not chunks:
+            return
+        rb = pack_table(
+            pa.Table.from_batches(chunks),
+            segment, paths["postings"], paths["checkpoints"], with_positions,
+            with_offsets=with_offsets,
+        )
+        if rb is not None:
+            yield rb
+
+    # small: one row per partition (lineage table)
+    ckpt_rows = shuffled.mapInArrow(pack_iter, CHECKPOINT_SCHEMA).collect()
+    if mark:
+        mark("shuffle+pack")
+
+    # per-term stats (term, df, ttf) — terms dict .tmd analogue, from the
+    # packed blocks' METADATA columns (the binary payload columns are
+    # pruned from the scan). Sorted within files only: every reader
+    # sorts in memory (term_index.load_term_index) or aggregates, and a
+    # range partitioning would cost a sampling job per segment.
+    (
+        spark.read.parquet(paths["postings"])
+        .groupBy("term")
+        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"))
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(paths["terms"])
+    )
+    if mark:
+        mark("terms_stats")
+
+    stats = {
+        "segment": segment,
+        "n_docs": n_docs,
+        "sum_dl": sum_dl,
+        "avgdl": sum_dl / n_docs if n_docs else 0.0,
+        "with_positions": with_positions,
+        "with_offsets": with_offsets,
+        "index_options": (
+            "DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS"
+            if with_offsets
+            else "DOCS_AND_FREQS_AND_POSITIONS"
+            if with_positions
+            else "DOCS_AND_FREQS"
+        ),
+    }
+    elapsed = time.monotonic() - started
+    n_postings = sum(r.n_postings or 0 for r in ckpt_rows)
+    row = {
+        "segment": segment,
+        "generation": generation,
+        "status": "live",
+        "n_docs": n_docs,
+        "sum_dl": sum_dl,
+        "n_postings": int(n_postings),
+        "bytes_packed": int(sum(r.bytes_packed or 0 for r in ckpt_rows)),
+        "n_partitions": len(ckpt_rows),
+        "elapsed_sec": elapsed,
+        "docs_per_sec": n_docs / elapsed if elapsed else 0.0,
+        "postings_per_sec": n_postings / elapsed if elapsed else 0.0,
+        "source": source,
+    }
+    if merged_from is None:
+        stats["doc_id_base"] = doc_id_base
+        row["resumed_partitions"] = sum(
+            1 for r in ckpt_rows if r.status == "skipped_checkpoint"
+        )
+    else:
+        stats["merged_from"] = merged_from
+        row["merged_from"] = merged_from
+    write_stats(index_dir, segment, stats)
+    write_manifest_row(index_dir, row)
+    return row
 
 
 def read_stats(index_dir: str, segment: str) -> dict:

@@ -124,10 +124,10 @@ def minhash_candidate_pairs(
     join is an equi-join on (band_id, band_hash) — co-partitioned by
     Catalyst, quadratic only within a bucket (by construction small).
 
-    Plan (2 shuffles): the signature array rides THROUGH the band
-    explode, so est_jaccard is computed inside the band join itself
-    (zip_with + aggregate, JVM expressions) and one groupBy dedups
-    pairs that collide in several bands. The round-1 plan instead ran
+    Plan (2 shuffles): the flat signature columns ride THROUGH the
+    band explode, so est_jaccard is computed inside the band join
+    itself (one codegen'd string comparison per hash) and one groupBy
+    dedups pairs that collide in several bands. The round-1 plan instead ran
     distinct() on pairs and re-joined the signature table twice —
     three shuffles and the slowest bench query (11.2 s -> target ~5)."""
     # DISK_ONLY persist of the FLAT signature frame: both sides of the

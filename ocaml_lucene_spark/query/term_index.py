@@ -71,8 +71,8 @@ def load_term_index(index_dir: str, segment: str) -> TermIndex:
     """Compile (and cache) a segment's terms table into a TermIndex.
 
     Reads the terms parquet with pyarrow (no Spark job), sorts in
-    memory (files are range-partitioned and sorted within partitions,
-    but cross-file order is re-established defensively), and feeds the
+    memory (files are sorted within themselves only: the segment writer
+    does not range-partition them), and feeds the
     FST builder in ascending byte order with the ordinal as output.
     Cache entries are keyed by (path, dir fingerprint) so an in-place
     segment rebuild invalidates them."""

@@ -2,6 +2,8 @@
 the generated corpus plants ~2% exact and ~3% near duplicates
 (sources/corpus.py), so the operators must actually find them."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -72,6 +74,25 @@ def test_minhash_staging_persist_is_releasable(spark, docs):
     nd.collect()
     dedup.unpersist_staging(nd)
     assert nd._olspark_persisted == []
+
+
+@pytest.mark.parametrize("name", ["minhash_candidate_pairs", "near_dup_pairs"])
+def test_gate_query_staging_is_releasable(spark, name):
+    """The gate's all-columns sort (__spark_entry__._canonical) keeps the
+    operator's staging handle: releasing the collected gate frame leaves
+    no persisted RDD behind."""
+    import __spark_entry__ as entry
+
+    sf = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf):
+        pytest.skip(f"{sf} absent")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    df = entry.queries()[name](spark, sf)
+    df.collect()
+    assert len(df._olspark_persisted) == 1
+    dedup.unpersist_staging(df)
+    assert set(jsc.getPersistentRDDs().keys()) == before
 
 
 def test_minhash_estimates_track_exact_jaccard(spark, docs):

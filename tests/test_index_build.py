@@ -241,54 +241,6 @@ def test_not_clause_three_paths_agree(spark, built):
         assert math.isclose(gs, es, rel_tol=1e-9), (gd, gs, es)
 
 
-def test_int_term_id_shuffle_byte_identical(spark, tiny_corpus, tmp_path_factory):
-    """The int-term-id shuffle (dense sorted-vocabulary ranks instead of
-    term strings through THE shuffle) must be a pure transport
-    optimization: every packed block row — including the binary
-    payloads — is identical to the string-shuffle build's."""
-    docs = assign_doc_ids(spark.read.parquet(tiny_corpus)).select("doc_id", "text").cache()
-    dirs = {}
-    for flag in (True, False):
-        d = str(tmp_path_factory.mktemp(f"idx_tid_{flag}"))
-        build_index(
-            docs, d, segment="s", n_partitions=4, salt_df_threshold=300,
-            n_salts=4, int_term_ids=flag,
-        )
-        dirs[flag] = d
-
-    def rows(d):
-        df = spark.read.parquet(f"{d}/segments/s/postings")
-        return sorted(
-            (
-                r.term, r.block_no, r.n, r.first_doc, r.last_doc, r.max_tf,
-                r.sum_tf, r.min_dl, tuple(r.ub_tfs), tuple(r.ub_dls),
-                bytes(r.doc_bytes), bytes(r.tf_bytes), bytes(r.dl_bytes),
-            )
-            for r in df.collect()
-        )
-
-    assert rows(dirs[True]) == rows(dirs[False])
-    terms = {
-        flag: sorted(
-            (r.term, r.df, r.ttf)
-            for r in spark.read.parquet(f"{dirs[flag]}/segments/s/terms").collect()
-        )
-        for flag in dirs
-    }
-    assert terms[True] == terms[False]
-    # tiny-vocab fallback guard: a vocabulary over the broadcast bound
-    # falls back to the string shuffle and still answers identically
-    d3 = str(tmp_path_factory.mktemp("idx_tid_fb"))
-    build_index(
-        docs, d3, segment="s", n_partitions=4, salt_df_threshold=300,
-        n_salts=4, int_term_ids=True, max_int_id_vocab=2,
-    )
-    a = bm25_topk_indexed(spark, dirs[True], ["the"], "or", 5).collect()
-    b = bm25_topk_indexed(spark, d3, ["the"], "or", 5).collect()
-    assert [(r.doc_id, r.score) for r in a] == [(r.doc_id, r.score) for r in b]
-    docs.unpersist()
-
-
 def test_and_prune_decode_is_driver_free(spark, built):
     """The conjunctive block-range prune collects only int64 doc ids
     (decoded executor-side); the single-column plan never carries the
@@ -489,31 +441,3 @@ def test_not_clause_overlapping_exclude(spark, built):
     # and-mode with a required term excluded is provably empty on all paths
     assert bm25_topk_indexed(spark, index_dir, inc, "and", 10, exclude=[inc[0]]).count() == 0
     assert bm25_topk_wand_exec(spark, index_dir, inc, "and", 10, exclude=[inc[0]]).count() == 0
-
-
-def test_tf_agg_local_byte_identical(spark, tiny_corpus, tmp_path_factory):
-    """tf_agg='local' (zero-exchange partition-local tf kernel) must be
-    a pure plan optimization: every packed block row — including binary
-    payloads — identical to the shuffle-agg build's, with salting on."""
-    docs = assign_doc_ids(spark.read.parquet(tiny_corpus)).select("doc_id", "text").cache()
-    dirs = {}
-    for mode in ("shuffle", "local"):
-        d = str(tmp_path_factory.mktemp(f"idx_tfa_{mode}"))
-        build_index(
-            docs, d, segment="s", n_partitions=4, salt_df_threshold=300,
-            n_salts=4, tf_agg=mode,
-        )
-        dirs[mode] = d
-
-    def rows(d):
-        df = spark.read.parquet(f"{d}/segments/s/postings")
-        return sorted(
-            (
-                r.term, r.block_no, r.n, r.first_doc, r.last_doc, r.max_tf,
-                r.sum_tf, r.min_dl, tuple(r.ub_tfs), tuple(r.ub_dls),
-                bytes(r.doc_bytes), bytes(r.tf_bytes), bytes(r.dl_bytes),
-            )
-            for r in df.collect()
-        )
-
-    assert rows(dirs["shuffle"]) == rows(dirs["local"])

@@ -6,7 +6,8 @@ provably has no result starts no Spark job before collect(), and a
 wand-routed query runs only its postings scan's jobs — three on this
 index, where the terms-parquet df lookup it replaced cost three more,
 and two once the postings' parquet schema is known for the live
-segment set."""
+segment set. The write path (build, add, merge) is pinned the same
+way."""
 
 import itertools
 
@@ -101,3 +102,63 @@ def test_empty_result_starts_no_job_before_collect(spark, indexed, plan, terms, 
     rows, planned, _ = _count_jobs(spark, lambda: fn(spark, index_dir, terms, mode, 10))
     assert rows == []
     assert planned == 0
+
+
+# ---------------------------------------------------------------- writes
+
+# Jobs per write call on the fixtures below (800-doc build, 300-doc
+# add, merges of every live segment), measured before the segment
+# writer was shared: upper bounds, so a change that adds a driver
+# action to the write path fails here. With the shared writer, whose
+# terms write has no range-partition sampling job, they run 10, 17, 8
+# and 14.
+MAX_WRITE_JOBS = {"build": 11, "add": 18, "merge": 8, "merge_deletes": 14}
+
+
+def _jobs(spark, fn):
+    """(fn(), jobs started while it ran)."""
+    sc = spark.sparkContext
+    group = f"write-jobs-{next(_groups)}"
+    bus = sc._jsc.sc().listenerBus()
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        bus.waitUntilEmpty()
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, n
+
+
+def test_write_path_job_counts(spark, tiny_corpus, tmp_path_factory):
+    from ocaml_lucene_spark.index import segments as seg
+    from ocaml_lucene_spark.index.build import add_documents
+    from ocaml_lucene_spark.index.deletes import delete_docs
+    from ocaml_lucene_spark.index.merge import merge_segments
+    from ocaml_lucene_spark.sources.corpus import generate_corpus
+
+    index_dir = str(tmp_path_factory.mktemp("index_write_jobs"))
+    extra = [
+        spark.read.parquet(
+            generate_corpus(str(tmp_path_factory.mktemp(f"add{i}")), n_docs=300, seed=43 + i)
+        )
+        for i in range(2)
+    ]
+    docs = assign_doc_ids(spark.read.parquet(tiny_corpus)).select("doc_id", "text").cache()
+    docs.count()
+    jobs = {}
+
+    def merge_all():
+        live = [r["segment"] for r in seg.list_segments(index_dir)]
+        return merge_segments(spark, index_dir, live, n_partitions=4)
+
+    _, jobs["build"] = _jobs(spark, lambda: build_index(docs, index_dir, n_partitions=4))
+    _, jobs["add"] = _jobs(spark, lambda: add_documents(extra[0], index_dir, n_partitions=4))
+    _, jobs["merge"] = _jobs(spark, merge_all)
+    add_documents(extra[1], index_dir, n_partitions=4)
+    delete_docs(index_dir, range(0, 1400, 97))
+    m, jobs["merge_deletes"] = _jobs(spark, merge_all)
+    docs.unpersist()
+    assert m["n_docs"] == 1400 - len(range(0, 1400, 97))
+    assert all(jobs[k] <= MAX_WRITE_JOBS[k] for k in jobs), (jobs, MAX_WRITE_JOBS)

@@ -133,19 +133,12 @@ def test_topk_is_take_ordered_not_global_sort(spark, built):
 
 
 def test_build_shuffle_shapes(spark, tiny_corpus):
-    """The build's shuffle boundary, both tf-agg modes (build.py):
-
-    - tf_agg='shuffle' (default): JVM hash agg — a PARTIAL
-      HashAggregate collapses (doc,term) duplicates before its
-      exchange, so both exchanges carry aggregated-posting volume,
-      never raw tokens; the pack exchange is keyed on term; no range
-      partitioning anywhere (repartitionByRange is banned for
-      determinism — CLAUDE.md).
-    - tf_agg='local': ZERO aggregation exchanges — the pandas kernel
-      exploits the all-tokens-of-a-doc-in-one-partition invariant, so
-      the ONLY hashpartitioning in the whole pack input is the
-      explicit (term) repartition. This is the literally-one-shuffle
-      build."""
+    """The build's tf shuffle boundary (build.py): a PARTIAL
+    HashAggregate collapses (doc,term) duplicates before its exchange,
+    so both exchanges carry aggregated-posting volume, never raw
+    tokens; the pack exchange is keyed on term; no range partitioning
+    anywhere (repartitionByRange is banned for determinism —
+    CLAUDE.md)."""
     from pyspark.sql import functions as F
 
     from ocaml_lucene_spark.functions.analysis import tokens_col
@@ -155,7 +148,6 @@ def test_build_shuffle_shapes(spark, tiny_corpus):
         "doc_id", tokens_col("text").alias("toks")
     ).withColumn("dl", F.size("toks").cast("long"))
 
-    # -- shuffle mode: partial agg before the exchange, term-keyed pack
     tf = (
         base.select("doc_id", "dl", F.explode("toks").alias("term"))
         .groupBy("doc_id", "term", "dl")
@@ -168,44 +160,6 @@ def test_build_shuffle_shapes(spark, tiny_corpus):
     assert exchanges and "term" in exchanges[-1], exchanges
     assert re.search(r"Functions \[1\]: \[partial_count", plan), plan
     assert "rangepartitioning" not in plan, plan
-
-    # -- local mode: the pack input has exactly ONE hashpartitioning
-    from itertools import chain
-
-    import numpy as np
-    import pandas as pd
-
-    def tf_part(batches):
-        for pdf in batches:
-            sizes = pdf["dl"].to_numpy(dtype=np.int64)
-            flat = np.array(list(chain.from_iterable(pdf["toks"])), dtype=object)
-            if not flat.size:
-                continue
-            yield (
-                pd.DataFrame(
-                    {
-                        "doc_id": np.repeat(pdf["doc_id"].to_numpy(np.int64), sizes),
-                        "term": flat,
-                        "dl": np.repeat(sizes, sizes),
-                    }
-                )
-                .groupby(["doc_id", "term", "dl"], sort=False)
-                .size()
-                .reset_index(name="tf")
-            )
-
-    tf_local = (
-        base.mapInPandas(tf_part, "doc_id long, term string, dl long, tf long")
-        .repartition(4, "term")
-        .sortWithinPartitions("term", "doc_id")
-    )
-    plan = _plan(tf_local)
-    exchanges = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
-    # the url exchange belongs to docID assignment (a separate,
-    # once-per-ingest stage carrying (url, text) rows); the BUILD
-    # itself contributes exactly one: the term-keyed pack repartition
-    build_exchanges = [e for e in exchanges if "url" not in e]
-    assert len(build_exchanges) == 1 and "term" in build_exchanges[0], exchanges
 
 
 def test_facet_indexed_reads_only_docid_stream_and_facet_column(spark, built):
