@@ -6,9 +6,10 @@
     df-driven hot-term salting -> segments.write_segment: hash
     repartition(term, salt) [THE one pack shuffle] -> JVM sort within
     partitions -> mapInArrow pack kernel (numpy delta+FOR/PFOR blocks,
-    term-sorted parquet shard, checkpoint row) -> terms/stats/manifest
-    writes. Import (build_index_from_postings) and merge end in the
-    same writer.
+    term-sorted parquet shard, checkpoint row and the shard's (term,
+    df, ttf) rows) -> terms table summed on the driver from those rows
+    (the postings are not read back), stats/manifest writes. Import
+    (build_index_from_postings) and merge end in the same writer.
 
 Scale design notes (100 TB, 1000 executors):
 - docID assignment is a hash shuffle on url + a driver exchange of

@@ -6,11 +6,15 @@ merge itself, mirroring Lucene's TieredMergePolicy: segments are
 grouped into size tiers and the smallest ``merge_factor`` segments of
 an over-full tier are merged into one.
 
-Merge = decode candidate segments' blocks (mapInPandas numpy, dropping
-deleted docs and re-bucketing salted rows over the merged doc span) ->
-union of the source norms -> segments.write_segment, the same writer
-build and import end in (one hash shuffle on (term, salt), JVM sort,
-mapInArrow pack) -> new segment + manifest rows marking sources
+Merge = decode the candidate segments' blocks (``decode_blocks`` under
+mapInArrow: one batch of blocks decodes into concatenated numpy arrays,
+deleted docs drop with one isin, salted rows re-bucket over the merged
+doc span) -> the union of the source norms less the purged docs (an
+anti-join with deletes.deleted_frame, built in the JVM), written by
+build's norms writer, whose Observation gives n_docs/sum_dl ->
+segments.write_segment, the same writer build and import end in (one
+hash shuffle on (term, salt), JVM sort, mapInArrow pack that also
+yields the terms stats) -> new segment + manifest rows marking sources
 'merged'. Because docIDs are global and BM25 stats aggregate across
 live segments, queries are invariant under merge (tested) — merge is
 purely a layout/locality operation, exactly like Lucene's.
@@ -20,10 +24,11 @@ from __future__ import annotations
 
 import time
 
+import numpy as np
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from . import segments as seg
+from .build import _write_norms
 
 
 def select_merges(
@@ -50,6 +55,93 @@ def select_merges(
                 merges.append([t["segment"] for t in tier])
             tier = []
     return merges
+
+
+def decode_blocks(
+    batch,
+    deleted: np.ndarray | None,
+    lo: int,
+    span: int,
+    n_salts: int,
+    with_positions: bool,
+    with_offsets: bool,
+):
+    """Merge's decode kernel: one Arrow batch of packed block rows
+    (term, block_no, n, doc_bytes, tf_bytes, dl_bytes[, pos_bytes]
+    [, off_bytes]) -> one RecordBatch of postings rows (term, salt,
+    doc_id, tf, dl[, positions][, starts]); None when no row is left.
+
+    Each block's streams decode into numpy arrays that are concatenated
+    over the whole batch, so every step after the decode is one numpy
+    or Arrow call per batch. Docs in the sorted ``deleted`` ids (None:
+    purge nothing) are dropped. Rows of a salted block (block_no >=
+    100_000) re-bucket over the merged doc span [lo, lo + span) into
+    salts 1..n_salts, so the merged segment keeps doc-contiguous salt
+    ranges; every other row stays salt 0 (one run, fewer blocks)."""
+    import pyarrow as pa
+
+    from ..codecs import pfor
+    from ..codecs.blocks import decode_flat_stream
+    from ..codecs.delta import delta_decode
+
+    counts = batch.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
+    if not counts.size:
+        return None
+    ns = counts.tolist()
+    docs = np.concatenate(
+        [delta_decode(b) for b in batch.column("doc_bytes").to_pylist()]
+    )
+    tf = np.concatenate(
+        [pfor.decode(b, c) for b, c in zip(batch.column("tf_bytes").to_pylist(), ns)]
+    ).astype(np.int64)
+    dl = np.concatenate(
+        [pfor.decode(b, c) for b, c in zip(batch.column("dl_bytes").to_pylist(), ns)]
+    ).astype(np.int64)
+    block_of = np.repeat(np.arange(counts.size), counts)
+    salted = (
+        batch.column("block_no").to_numpy(zero_copy_only=False) // 100_000 > 0
+    )[block_of]
+    block_tfs = np.split(tf, np.cumsum(counts)[:-1])
+
+    def flat(name):
+        """One per-occurrence stream (positions or offsets) of every
+        block, concatenated."""
+        return np.concatenate(
+            [
+                decode_flat_stream(b, t)
+                for b, t in zip(batch.column(name).to_pylist(), block_tfs)
+            ]
+        )
+
+    lists = {}
+    if with_positions:
+        lists["positions"] = flat("pos_bytes")
+    if with_offsets:
+        # the offsets stream shares the positions framing
+        lists["starts"] = flat("off_bytes")
+    if deleted is not None:
+        keep = ~np.isin(docs, deleted)
+        if not keep.all():
+            occ_keep = np.repeat(keep, tf)
+            lists = {k: v[occ_keep] for k, v in lists.items()}
+            docs, tf, dl = docs[keep], tf[keep], dl[keep]
+            salted, block_of = salted[keep], block_of[keep]
+            if not docs.size:
+                return None
+    salt = np.where(
+        salted, 1 + np.minimum(n_salts - 1, (docs - lo) * n_salts // span), 0
+    )
+    cols = {
+        "term": batch.column("term").take(pa.array(block_of)),
+        "salt": pa.array(salt, pa.int32()),
+        "doc_id": pa.array(docs),
+        "tf": pa.array(tf),
+        "dl": pa.array(dl),
+    }
+    offsets = pa.array(np.concatenate([[0], np.cumsum(tf)]), pa.int32())
+    for k, v in lists.items():
+        cols[k] = pa.ListArray.from_arrays(offsets, pa.array(v, pa.int64()))
+    return pa.RecordBatch.from_pydict(cols)
 
 
 def merge_segments(
@@ -93,8 +185,10 @@ def merge_segments(
     # doc-contiguous salt property WAND pruning relies on
     bounds = seg.doc_bounds(index_dir, segment_names)
     m_lo, m_span = (bounds[0], bounds[1] - bounds[0] + 1) if bounds else (0, 1)
-    n_salts_merged = n_salts
 
+    cols = ["term", "block_no", "n", "doc_bytes", "tf_bytes", "dl_bytes"]
+    cols += ["pos_bytes"] if with_positions else []
+    cols += ["off_bytes"] if with_offsets else []
     pos_schema = (
         "term string, salt int, doc_id long, tf long, dl long"
         + (", positions array<long>" if with_positions else "")
@@ -102,96 +196,36 @@ def merge_segments(
     )
 
     def unpack(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..codecs import pfor
-        from ..codecs.blocks import decode_positions
-        from ..codecs.delta import delta_decode
-
-        for pdf in batches:
-            outs = []
-            ob_col = (
-                pdf["off_bytes"] if "off_bytes" in pdf.columns else [None] * len(pdf)
+        for rb in batches:
+            out = decode_blocks(
+                rb, deleted, m_lo, m_span, n_salts, with_positions, with_offsets
             )
-            for term, bno, n, db, tb, lb, pb, ob in zip(
-                pdf["term"], pdf["block_no"], pdf["n"], pdf["doc_bytes"],
-                pdf["tf_bytes"], pdf["dl_bytes"], pdf["pos_bytes"], ob_col,
-            ):
-                docs = delta_decode(bytes(db))
-                tf = pfor.decode(bytes(tb), int(n)).astype(np.int64)
-                dl = pfor.decode(bytes(lb), int(n)).astype(np.int64)
-                pos_arr = decode_positions(bytes(pb), tf) if with_positions else None
-                off_arr = decode_positions(bytes(ob), tf) if with_offsets else None
-                if deleted is not None:
-                    keep = ~np.isin(docs, deleted)
-                    if not keep.all():
-                        # positions/starts are per-doc list columns:
-                        # keep the kept docs' lists
-                        if pos_arr is not None:
-                            pos_arr = [a for a, k in zip(pos_arr, keep) if k]
-                        if off_arr is not None:
-                            off_arr = [a for a, k in zip(off_arr, keep) if k]
-                        docs, tf, dl = docs[keep], tf[keep], dl[keep]
-                        if not docs.size:
-                            continue
-                # hot (salted) rows re-bucket over the merged doc span;
-                # unsalted terms stay salt 0 (one run, fewer blocks)
-                if int(bno) // 100_000 > 0:
-                    salt = 1 + np.minimum(
-                        n_salts_merged - 1,
-                        (docs - m_lo) * n_salts_merged // m_span,
-                    ).astype(np.int64)
-                else:
-                    salt = np.zeros(docs.size, dtype=np.int64)
-                d = {
-                    "term": term,
-                    "salt": salt,
-                    "doc_id": docs,
-                    "tf": tf,
-                    "dl": dl,
-                }
-                if with_positions:
-                    d["positions"] = pos_arr
-                if with_offsets:
-                    # offsets stream shares the positions framing
-                    d["starts"] = off_arr
-                outs.append(pd.DataFrame(d))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
-    postings = blocks.mapInPandas(unpack, pos_schema)
+    postings = blocks.select(*cols).mapInArrow(unpack, pos_schema)
 
     generation = seg.next_generation(index_dir)
     new_name = f"merged{generation:06d}"
     paths = seg.segment_paths(index_dir, new_name)
 
-    # norms = union of source norms
+    # norms = union of source norms, less the purged docs (Lucene merge:
+    # the rewritten segment no longer contains them anywhere)
     norm_paths = [seg.segment_paths(index_dir, s)["norms"] for s in segment_names]
     norms_src = spark.read.parquet(*norm_paths)
     purged_ids: list[int] = []
     if deleted is not None:
-        # purge deleted docs from norms + stats (Lucene merge: the
-        # rewritten segment no longer contains them anywhere)
-        dd = spark.createDataFrame([(int(i),) for i in deleted], "doc_id long")
+        dd = del_mod.deleted_frame(spark, deleted)
         purged_ids = [
-            r.doc_id for r in norms_src.join(F.broadcast(dd), "doc_id").collect()
+            r.doc_id for r in norms_src.join(dd, "doc_id").select("doc_id").collect()
         ]
-        norms_src = norms_src.join(F.broadcast(dd), "doc_id", "left_anti")
-    norms_src.write.mode("overwrite").parquet(paths["norms"])
+        norms_src = norms_src.join(dd, "doc_id", "left_anti")
+    corpus = _write_norms(norms_src, paths["norms"])
 
-    if deleted is not None:
-        agg_row = spark.read.parquet(paths["norms"]).agg(
-            F.count("*"), F.sum("dl")
-        ).first()
-        n_docs = int(agg_row[0] or 0)
-        sum_dl = int(agg_row[1] or 0)
-    else:
-        n_docs = sum(r["n_docs"] for r in sources)
-        sum_dl = sum(r["sum_dl"] for r in sources)
     manifest_row = seg.write_segment(
         postings, index_dir, new_name, generation,
-        n_docs=n_docs, sum_dl=sum_dl, source="merge", started=t0,
+        n_docs=int(corpus["n_docs"]), sum_dl=int(corpus["sum_dl"] or 0),
+        source="merge", started=t0,
         with_positions=with_positions, with_offsets=with_offsets,
         n_partitions=n_partitions, merged_from=segment_names,
     )

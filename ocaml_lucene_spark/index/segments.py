@@ -52,6 +52,10 @@ CHECKPOINT_SCHEMA = (
     "fingerprint string"
 )
 
+# what the pack kernel returns per partition: its checkpoint row plus
+# its shard's (term, df, ttf) rows
+PACK_SCHEMA = CHECKPOINT_SCHEMA + ", term string, df long, ttf long"
+
 
 def segment_paths(index_dir: str, segment: str) -> dict[str, str]:
     base = os.path.join(index_dir, "segments", segment)
@@ -94,8 +98,9 @@ def pack_table(
     """Arrow-native pack kernel (runs under mapInArrow in
     ``write_segment``): one shuffle partition of (term, salt, doc_id,
     tf, dl[, positions][, starts], pid) rows -> packed block rows
-    written as a term-sorted parquet shard + one checkpoint/metrics
-    RecordBatch returned (None for an empty input).
+    written as a term-sorted parquet shard; returns a PACK_SCHEMA table
+    of the checkpoint/metrics row and the shard's (term, df, ttf) rows
+    (None for an empty input).
 
     Arrow end to end: term strings stay in Arrow buffers (never
     materialized as Python str objects — the pandas object-string heap
@@ -106,8 +111,8 @@ def pack_table(
 
     Resumable: if this partition's shard + checkpoint already exist
     with the same content fingerprint, the write is skipped and the
-    existing checkpoint row is returned (build DAG restart without
-    recompute).
+    existing checkpoint row is returned with the term rows (build DAG
+    restart without recompute).
     """
     import hashlib
 
@@ -164,6 +169,17 @@ def pack_table(
         terms, term_eq, _ = term_meta()
     tfs = col("tf").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     dls = col("dl").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    # the terms-dict (.tmd) stats of this shard, one row per term run:
+    # df = its postings, ttf = its tf sum. Computed before the resume
+    # check, so a skipped partition still contributes its terms.
+    term_rows = np.concatenate([[0], np.nonzero(~term_eq)[0] + 1])
+    term_stats = pa.table(
+        {
+            "term": terms.take(pa.array(term_rows)),
+            "df": pa.array(np.diff(np.append(term_rows, n)), pa.int64()),
+            "ttf": pa.array(np.add.reduceat(tfs, term_rows), pa.int64()),
+        }
+    )
     pos_flat = None
     if with_positions:
         pos_flat = col("positions").flatten().to_numpy(zero_copy_only=False).astype(
@@ -196,7 +212,7 @@ def pack_table(
             row = json.load(f)
         if row.get("fingerprint") == fingerprint:
             row["status"] = "skipped_checkpoint"
-            return _checkpoint_batch(row)
+            return _pack_output(row, term_stats)
 
     # group boundaries per (term, salt) run
     change = np.nonzero(~term_eq | (salts[1:] != salts[:-1]))[0] + 1
@@ -295,30 +311,65 @@ def pack_table(
     with open(ckpt + ".tmp", "w") as f:
         json.dump(row, f)
     os.replace(ckpt + ".tmp", ckpt)
-    return _checkpoint_batch(row)
+    return _pack_output(row, term_stats)
 
 
-def _checkpoint_batch(row: dict):
-    """One checkpoint row as a RecordBatch matching CHECKPOINT_SCHEMA."""
+def _pack_output(row: dict, term_stats):
+    """The pack kernel's output (PACK_SCHEMA) as one Arrow table: the
+    checkpoint row, then the shard's (term, df, ttf) rows. Each kind of
+    row holds nulls in the other kind's columns."""
     import pyarrow as pa
 
-    schema = pa.schema(
-        [
-            ("segment", pa.string()),
-            ("partition_id", pa.int32()),
-            ("min_term", pa.string()),
-            ("max_term", pa.string()),
-            ("n_terms", pa.int64()),
-            ("n_postings", pa.int64()),
-            ("n_blocks", pa.int64()),
-            ("bytes_packed", pa.int64()),
-            ("elapsed_sec", pa.float64()),
-            ("postings_per_sec", pa.float64()),
-            ("status", pa.string()),
-            ("fingerprint", pa.string()),
-        ]
+    ckpt = pa.Table.from_pylist(
+        [row],
+        schema=pa.schema(
+            [
+                ("segment", pa.string()),
+                ("partition_id", pa.int32()),
+                ("min_term", pa.string()),
+                ("max_term", pa.string()),
+                ("n_terms", pa.int64()),
+                ("n_postings", pa.int64()),
+                ("n_blocks", pa.int64()),
+                ("bytes_packed", pa.int64()),
+                ("elapsed_sec", pa.float64()),
+                ("postings_per_sec", pa.float64()),
+                ("status", pa.string()),
+                ("fingerprint", pa.string()),
+            ]
+        ),
     )
-    return pa.RecordBatch.from_pylist([row], schema=schema)
+    terms = term_stats.cast(
+        pa.schema([("term", pa.string()), ("df", pa.int64()), ("ttf", pa.int64())])
+    )
+    return pa.concat_tables([ckpt, terms], promote_options="default")
+
+
+def _write_terms(term_stats, path: str) -> None:
+    """Write the segment's terms table (term, df, ttf) from the pack
+    kernels' per-shard rows: a hot term's salt shards land in different
+    partitions, so its partial rows are summed here, leaving one row
+    per term. Vocabulary-sized (term_index.load_term_index loads the
+    same table into the driver); one term-sorted file."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    g = term_stats.group_by("term").aggregate([("df", "sum"), ("ttf", "sum")])
+    t = pa.table(
+        {"term": g["term"], "df": g["df_sum"], "ttf": g["ttf_sum"]}
+    ).sort_by("term")
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    tmp = os.path.join(path, f".part-00000.parquet.tmp-{uuid.uuid4().hex[:8]}")
+    # the terms are unique, so a dictionary would only add to the term
+    # column; df/ttf repeat small values and keep theirs
+    pq.write_table(
+        t, tmp, compression="snappy", use_dictionary=["df", "ttf"],
+        store_schema=False,
+    )
+    os.replace(tmp, os.path.join(path, "part-00000.parquet"))
 
 
 def write_segment(
@@ -346,13 +397,16 @@ def write_segment(
     ``postings``: (term, salt, doc_id, tf, dl[, positions][, starts])
     with one row per (term, doc); ``salt`` is the hot-term doc-range
     bucket (0 = unsalted). The norms are the caller's: ``n_docs`` and
-    ``sum_dl`` describe them. Writes the packed postings, the terms
-    stats, stats.json and the manifest row, and returns the row. A
+    ``sum_dl`` describe them. Writes the packed postings, then the terms
+    stats from the (term, df, ttf) rows the pack kernels return with
+    their checkpoint rows (the postings are not read back), stats.json
+    and the manifest row, and returns the row. A
     merge records ``merged_from`` where a build records its
     ``doc_id_base`` and resumed partition count. ``mark(label)`` is
     called after the pack and after the terms write (build profile).
     ``started`` is the caller's time.monotonic() start, for the row's
     elapsed and rate fields."""
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
     spark = postings.sparkSession
@@ -384,31 +438,30 @@ def write_segment(
         chunks = list(batches)
         if not chunks:
             return
-        rb = pack_table(
+        packed = pack_table(
             pa.Table.from_batches(chunks),
             segment, paths["postings"], paths["checkpoints"], with_positions,
             with_offsets=with_offsets,
         )
-        if rb is not None:
-            yield rb
+        if packed is not None:
+            yield from packed.to_batches()
 
-    # small: one row per partition (lineage table)
-    ckpt_rows = shuffled.mapInArrow(pack_iter, CHECKPOINT_SCHEMA).collect()
+    # small: one checkpoint row per partition (lineage table) plus the
+    # vocabulary's term rows
+    out = shuffled.mapInArrow(pack_iter, PACK_SCHEMA).toArrow()
+    ckpt = out.filter(pc.is_valid(out["segment"]))
+    if not ckpt.num_rows:
+        # no manifest row for a segment without postings (e.g. a merge
+        # whose every doc is deleted): queries could not read it
+        raise ValueError(f"segment {segment}: no postings to write")
     if mark:
         mark("shuffle+pack")
 
-    # per-term stats (term, df, ttf) — terms dict .tmd analogue, from the
-    # packed blocks' METADATA columns (the binary payload columns are
-    # pruned from the scan). Sorted within files only: every reader
-    # sorts in memory (term_index.load_term_index) or aggregates, and a
-    # range partitioning would cost a sampling job per segment.
-    (
-        spark.read.parquet(paths["postings"])
-        .groupBy("term")
-        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"))
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(paths["terms"])
+    # per-term stats (term, df, ttf), the terms dict .tmd analogue, from
+    # the pack kernels: the postings just written are not read again
+    _write_terms(
+        out.filter(pc.is_valid(out["term"])).select(["term", "df", "ttf"]),
+        paths["terms"],
     )
     if mark:
         mark("terms_stats")
@@ -429,7 +482,7 @@ def write_segment(
         ),
     }
     elapsed = time.monotonic() - started
-    n_postings = sum(r.n_postings or 0 for r in ckpt_rows)
+    n_postings = pc.sum(ckpt["n_postings"]).as_py() or 0
     row = {
         "segment": segment,
         "generation": generation,
@@ -437,8 +490,8 @@ def write_segment(
         "n_docs": n_docs,
         "sum_dl": sum_dl,
         "n_postings": int(n_postings),
-        "bytes_packed": int(sum(r.bytes_packed or 0 for r in ckpt_rows)),
-        "n_partitions": len(ckpt_rows),
+        "bytes_packed": int(pc.sum(ckpt["bytes_packed"]).as_py() or 0),
+        "n_partitions": ckpt.num_rows,
         "elapsed_sec": elapsed,
         "docs_per_sec": n_docs / elapsed if elapsed else 0.0,
         "postings_per_sec": n_postings / elapsed if elapsed else 0.0,
@@ -446,8 +499,8 @@ def write_segment(
     }
     if merged_from is None:
         stats["doc_id_base"] = doc_id_base
-        row["resumed_partitions"] = sum(
-            1 for r in ckpt_rows if r.status == "skipped_checkpoint"
+        row["resumed_partitions"] = ckpt["status"].to_pylist().count(
+            "skipped_checkpoint"
         )
     else:
         stats["merged_from"] = merged_from

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..index import segments as seg
-from ..index.deletes import deleted_ids
+from ..index.deletes import deleted_ids, drop_deleted
 from ..oracle import B, K1
 from .term_index import dir_token, doc_freqs_mem
 from .wand import DeletedDocSet, PostingList, block_max_wand, frontier_ub, tfn_ub
@@ -231,7 +231,7 @@ def matching_docs_indexed(
     out = agg.filter(cond).select("doc_id")
     if must_not:
         out = out.join(excluded_docs_df(spark, index_dir, must_not), "doc_id", "left_anti")
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def count_matching_indexed(
@@ -391,7 +391,7 @@ def bm25_topk_indexed(
         agg = agg.filter(F.col("n_should") >= min_should_match)
     if exclude:
         agg = agg.join(excluded_docs_df(spark, index_dir, exclude), "doc_id", "left_anti")
-    agg = _deleted_filter(spark, index_dir, agg)  # liveDocs: results only
+    agg = drop_deleted(agg, index_dir)  # liveDocs: results only
     score = (
         F.round(F.col("score_raw"), round_to) if round_to is not None else F.col("score_raw")
     )
@@ -710,18 +710,6 @@ _WAND_BLOCK_COLS = (
     "ub_tfs", "ub_dls", "doc_bytes", "tf_bytes", "dl_bytes",
 )
 _WandBlock = namedtuple("_WandBlock", _WAND_BLOCK_COLS)
-
-
-def _deleted_filter(spark: SparkSession, index_dir: str, df: DataFrame) -> DataFrame:
-    """Drop deleted docs from a (doc_id, ...) frame (liveDocs filter:
-    results only — scoring stats intentionally still include deleted
-    docs until a purging merge, Lucene semantics). The deleted set is
-    metadata-sized; no-op when the index has no deletes."""
-    ids = deleted_ids(index_dir)
-    if not ids.size:
-        return df
-    dd = spark.createDataFrame([(int(i),) for i in ids], "doc_id long")
-    return df.join(F.broadcast(dd), "doc_id", "left_anti")
 
 
 def bm25_topk_wand_exec(
@@ -1256,8 +1244,8 @@ def bm25_topk_phrase(
     for t in dict.fromkeys(words):  # distinct terms, first-seen order
         w += idf(stats["n_docs"], dfs[t])
     pc = phrase_counts_indexed_multi(spark, index_dir, words)
-    joined = _deleted_filter(
-        spark, index_dir, norms_df(spark, index_dir).join(F.broadcast(pc), "doc_id")
+    joined = drop_deleted(
+        norms_df(spark, index_dir).join(F.broadcast(pc), "doc_id"), index_dir
     )
     tf = F.col("n_phrase").cast("double")
     raw = F.lit(w) * tf * (K1 + 1.0) / (
@@ -1290,9 +1278,9 @@ def span_first_indexed(
         .groupBy("doc_id")
         .agg(F.min("p").alias("first_pos"))
     )
-    # sort AFTER the deletes anti-join (like every _deleted_filter
+    # sort AFTER the deletes anti-join (like every drop_deleted
     # consumer): ordering through a join is an implementation accident
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def span_near_ordered_indexed(
@@ -1325,7 +1313,7 @@ def span_near_ordered_indexed(
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_pairs"))
     )
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def span_near_unordered_indexed(
@@ -1359,7 +1347,7 @@ def span_near_unordered_indexed(
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_pairs"))
     )
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def span_or_first_indexed(
@@ -1381,7 +1369,7 @@ def span_or_first_indexed(
             F.min("p").alias("first_pos"),
         )
     )
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def span_not_indexed(
@@ -1417,7 +1405,7 @@ def span_not_indexed(
         "left_anti",
     )
     out = survivors.groupBy("doc_id").agg(F.count("*").alias("n_spans"))
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def phrase_prefix_counts_indexed(
@@ -1460,7 +1448,7 @@ def phrase_prefix_counts_indexed(
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_matches"))
     )
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def span_multi_near_indexed(
@@ -1510,7 +1498,7 @@ def span_multi_near_indexed(
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_pairs"))
     )
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def _minimal_ordered_intervals(
@@ -1577,7 +1565,7 @@ def intervals_ordered_indexed(
         F.count("*").alias("n_intervals"),
         F.min(F.col("p2") - F.col("p1") + F.lit(1)).alias("min_width"),
     )
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def intervals_containing_indexed(
@@ -1618,7 +1606,7 @@ def intervals_containing_indexed(
         F.sum(F.col("has_inner").cast("long")).alias("n_containing"),
         F.sum((~F.col("has_inner")).cast("long")).alias("n_not_containing"),
     )
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def intervals_unordered_indexed(
@@ -1665,7 +1653,7 @@ def intervals_unordered_indexed(
         F.count("*").alias("n_intervals"),
         F.min(F.col("p") - F.col("prev_p") + F.lit(1)).alias("min_width"),
     )
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def search_sort_by_field_indexed(
@@ -1747,7 +1735,7 @@ def span_containing_indexed(
     # unique per term — and the semi-join preserves that; no distinct
     # (it would add a shuffle)
     out = containing.groupBy("doc_id").agg(F.count("*").alias("n_spans"))
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")
 
 
 def span_within_indexed(
@@ -1787,4 +1775,4 @@ def span_within_indexed(
     out = within.groupBy("doc_id").agg(
         F.count("*").alias("n_spans"), F.min("pi").alias("first_pos")
     )
-    return _deleted_filter(spark, index_dir, out).orderBy("doc_id")
+    return drop_deleted(out, index_dir).orderBy("doc_id")

@@ -1,9 +1,11 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults match the sandbox (32 cores); on a real cluster the
-same code runs via ``spark-submit --py-files`` with executor-count
-taken from the cluster manager — nothing here assumes local mode except
-the memory knob.
+Local mode takes its core count from ``cores``, then
+``$SPARK_GRAFT_CPUS``, then every core of the host (``local[*]``); the
+shuffle partition count defaults to the core count, at least 8. On a
+real cluster the same code runs via ``spark-submit --py-files`` with
+executor-count taken from the cluster manager — nothing here assumes
+local mode except the memory knob (``$SPARK_DRIVER_MEM``, default 24g).
 """
 
 from __future__ import annotations

@@ -36,3 +36,35 @@ def tiny_corpus(tmp_path_factory):
     out = tmp_path_factory.mktemp("corpus")
     path = generate_corpus(str(out), n_docs=800, seed=42)
     return path
+
+
+@pytest.fixture(scope="session")
+def check_terms(spark):
+    """check(index_dir): every live segment's terms table has one row
+    per term, equal to (term, sum(n), sum(sum_tf)) over the segment's
+    own postings blocks. The writer takes these stats from the pack
+    kernels, so a hot term's salt shards, resumed partitions and
+    mixed-salt merges must all still sum to the postings."""
+    from pyspark.sql import functions as F
+
+    from ocaml_lucene_spark.index import segments as seg
+
+    def check(index_dir):
+        segments = [r["segment"] for r in seg.list_segments(index_dir)]
+        for s in segments:
+            paths = seg.segment_paths(index_dir, s)
+            terms = [
+                (r.term, r.df, r.ttf)
+                for r in spark.read.parquet(paths["terms"]).collect()
+            ]
+            assert len(terms) == len({t for t, _, _ in terms}), s
+            want = (
+                spark.read.parquet(paths["postings"])
+                .groupBy("term")
+                .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"))
+                .collect()
+            )
+            assert sorted(terms) == sorted((r.term, r.df, r.ttf) for r in want), s
+        return segments
+
+    return check

@@ -67,7 +67,7 @@ def test_deletes_filter_all_plans_stats_unchanged(spark, built):
     assert n == len(m)
 
 
-def test_merge_purges_deleted_docs(spark, built):
+def test_merge_purges_deleted_docs(spark, built, check_terms):
     from ocaml_lucene_spark.index.merge import merge_segments
     from ocaml_lucene_spark.index.segments import list_segments
     from ocaml_lucene_spark.query.exec import (
@@ -91,6 +91,7 @@ def test_merge_purges_deleted_docs(spark, built):
     }
     assert not set(victims) & all_ids
     assert deleted_ids(index_dir).size == 0
+    check_terms(index_dir)
     assert global_stats(index_dir)["n_docs"] == oracle.n_docs - len(victims)
 
     # post-merge ranking: scores change (stats now exclude purged

@@ -94,8 +94,8 @@ def test_wand_rank_identity_and_prunes(spark, built):
     assert total_decoded < total_blocks, (total_decoded, total_blocks)
 
 
-def test_salting_split_hot_terms(spark, built):
-    index_dir, _, oracle = built
+def test_salting_split_hot_terms(spark, built, check_terms):
+    index_dir, row, oracle = built
     from ocaml_lucene_spark.query.exec import _postings_df
 
     # the hottest term must appear as several salt shards (block_no>=100000)
@@ -103,16 +103,38 @@ def test_salting_split_hot_terms(spark, built):
     rows = _postings_df(spark, index_dir, [hot_term]).select("block_no").collect()
     salts = {r.block_no // 100_000 for r in rows}
     assert len(salts) > 1, f"hot term {hot_term} not salted: {salts}"
+    # and its terms row sums its shards
+    assert check_terms(index_dir) == [row["segment"]]
 
 
-def test_resume_skips_completed_partitions(spark, tiny_corpus, tmp_path_factory):
+def test_import_terms_table(spark, tiny_corpus, tmp_path_factory, check_terms):
+    """build_index_from_postings, salted: terms equal its postings."""
+    from ocaml_lucene_spark.functions.analysis import tokens_col
+    from ocaml_lucene_spark.index.build import build_index_from_postings
+
+    index_dir = str(tmp_path_factory.mktemp("index_import_terms"))
+    docs = assign_doc_ids(spark.read.parquet(tiny_corpus)).select("doc_id", "text")
+    postings = (
+        docs.select("doc_id", F.explode(tokens_col("text")).alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").cast("long").alias("tf"))
+    )
+    build_index_from_postings(
+        postings, index_dir, n_partitions=4, salt_df_threshold=300, n_salts=4
+    )
+    check_terms(index_dir)
+
+
+def test_resume_skips_completed_partitions(spark, tiny_corpus, tmp_path_factory, check_terms):
     index_dir = str(tmp_path_factory.mktemp("index_resume"))
     docs = assign_doc_ids(spark.read.parquet(tiny_corpus)).select("doc_id", "text")
-    r1 = build_index(docs, index_dir, segment="seg1", n_partitions=4)
+    r1 = build_index(docs, index_dir, segment="seg1", n_partitions=4, salt_df_threshold=300)
     assert r1["resumed_partitions"] == 0
     # second run of the same segment: all partitions resume from checkpoint
-    r2 = build_index(docs, index_dir, segment="seg1", n_partitions=4)
+    r2 = build_index(docs, index_dir, segment="seg1", n_partitions=4, salt_df_threshold=300)
     assert r2["resumed_partitions"] == r2["n_partitions"], r2
+    # the resumed partitions still contribute every term
+    check_terms(index_dir)
     # and the index still answers identically
     a = bm25_topk_indexed(spark, index_dir, ["the"], "or", 5).collect()
     assert len(a) > 0

@@ -75,11 +75,14 @@ def test_merge_preserves_results(spark, multi):
     assert [r.doc_id for r in got] == [d for d, _ in exp]
 
 
-def test_maybe_merge_to_single_segment(spark, multi):
+def test_maybe_merge_to_single_segment(spark, multi, check_terms):
     index_dir, oracle = multi
     maybe_merge(spark, index_dir, merge_factor=2, n_partitions=4)
     assert len(list_segments(index_dir)) == 1
     _check(spark, index_dir, oracle, n_queries=8)
+    # the last merge takes a term salted in one source and unsalted in
+    # the other: still one terms row per term
+    check_terms(index_dir)
 
 
 def test_add_after_purging_merge_keeps_doc_ids_disjoint(spark, tiny_corpus, tmp_path_factory):

@@ -1,0 +1,106 @@
+"""merge.decode_blocks, the columnar merge decode kernel, against the
+per-block decoders (decode_doc_ids, decode_tfs, decode_positions) on
+blocks written by encode_posting_blocks: random terms with positions
+and offsets, salted and unsalted blocks, with and without deleted docs
+(including a block whose every doc is deleted)."""
+
+import numpy as np
+import pyarrow as pa
+import pytest
+
+from ocaml_lucene_spark.codecs.blocks import (
+    decode_doc_ids,
+    decode_positions,
+    decode_tfs,
+    encode_posting_blocks,
+)
+from ocaml_lucene_spark.index.merge import decode_blocks
+
+LO, SPAN, N_SALTS = 1_000, 5_000, 4
+
+
+def _blocks(seed):
+    """Block rows of random terms, as the postings parquet holds them;
+    every third term is a salted shard (block_no >= 100_000)."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(12):
+        n = int(rng.integers(1, 400))
+        docs = np.sort(rng.choice(np.arange(LO, LO + SPAN), n, replace=False))
+        tf = rng.integers(1, 6, n)
+        positions = np.concatenate([np.sort(rng.choice(200, t, replace=False)) for t in tf])
+        offsets = positions * 7 + 1
+        dl = rng.integers(5, 300, n)
+        salt = 1 + i % 4 if i % 3 == 0 else 0
+        for b in encode_posting_blocks(docs, tf, positions, dl, offsets=offsets):
+            rows.append(
+                {
+                    "term": f"t{i:02d}", "block_no": salt * 100_000 + b.block_no, "n": b.n,
+                    "doc_bytes": b.doc_bytes, "tf_bytes": b.tf_bytes, "dl_bytes": b.dl_bytes,
+                    "pos_bytes": b.pos_bytes, "off_bytes": b.off_bytes,
+                }
+            )
+    return rows
+
+
+def _per_block(rows, deleted, with_positions, with_offsets):
+    """The expected columns, decoded block by block."""
+    out = {"term": [], "salt": [], "doc_id": [], "tf": [], "dl": [], "positions": [], "starts": []}
+    for r in rows:
+        docs = decode_doc_ids(r["doc_bytes"])
+        tf = decode_tfs(r["tf_bytes"], r["n"])
+        dl = decode_tfs(r["dl_bytes"], r["n"])
+        pos = decode_positions(r["pos_bytes"], tf)
+        off = decode_positions(r["off_bytes"], tf)
+        for j, d in enumerate(docs.tolist()):
+            if deleted is not None and d in set(deleted.tolist()):
+                continue
+            salted = r["block_no"] // 100_000 > 0
+            out["term"].append(r["term"])
+            out["salt"].append(1 + min(N_SALTS - 1, (d - LO) * N_SALTS // SPAN) if salted else 0)
+            out["doc_id"].append(d)
+            out["tf"].append(int(tf[j]))
+            out["dl"].append(int(dl[j]))
+            out["positions"].append(pos[j].tolist())
+            out["starts"].append(off[j].tolist())
+    if not with_positions:
+        del out["positions"]
+    if not with_offsets:
+        del out["starts"]
+    return out
+
+
+@pytest.mark.parametrize("with_positions,with_offsets", [(False, False), (True, False), (True, True)])
+@pytest.mark.parametrize("deletes", ["none", "some", "whole_block"])
+def test_decode_blocks_matches_per_block_decoders(with_positions, with_offsets, deletes):
+    rows = _blocks(seed=7)
+    deleted = None
+    if deletes != "none":
+        rng = np.random.default_rng(11)
+        all_docs = np.concatenate([decode_doc_ids(r["doc_bytes"]) for r in rows])
+        deleted = rng.choice(np.unique(all_docs), 150, replace=False)
+        if deletes == "whole_block":
+            # every doc of a salted block and of an unsalted one
+            whole = [r for r in rows if r["block_no"] >= 100_000][:1]
+            whole += [r for r in rows if r["block_no"] < 100_000][:1]
+            deleted = np.concatenate([deleted] + [decode_doc_ids(r["doc_bytes"]) for r in whole])
+        deleted = np.unique(deleted).astype(np.int64)
+    cols = ["term", "block_no", "n", "doc_bytes", "tf_bytes", "dl_bytes"]
+    cols += ["pos_bytes"] if with_positions else []
+    cols += ["off_bytes"] if with_offsets else []
+    batch = pa.RecordBatch.from_pylist([{c: r[c] for c in cols} for r in rows])
+
+    got = decode_blocks(batch, deleted, LO, SPAN, N_SALTS, with_positions, with_offsets)
+    want = _per_block(rows, deleted, with_positions, with_offsets)
+    assert got.schema.names == list(want)
+    assert got.to_pydict() == want
+    assert any(s > 0 for s in want["salt"]) and 0 in want["salt"]
+
+
+def test_decode_blocks_everything_deleted():
+    rows = _blocks(seed=3)[:4]
+    batch = pa.RecordBatch.from_pylist(
+        [{c: r[c] for c in ("term", "block_no", "n", "doc_bytes", "tf_bytes", "dl_bytes")} for r in rows]
+    )
+    deleted = np.unique(np.concatenate([decode_doc_ids(r["doc_bytes"]) for r in rows]))
+    assert decode_blocks(batch, deleted, LO, SPAN, N_SALTS, False, False) is None
