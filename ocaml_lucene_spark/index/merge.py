@@ -151,14 +151,17 @@ def merge_segments(
     n_partitions: int | None = None,
     n_salts: int = 16,
     purge_deleted: bool = True,
-) -> dict:
-    """Merge the named segments into one new segment.
+) -> dict | None:
+    """Merge the named segments into one new segment; returns its
+    manifest row.
 
     purge_deleted (default): Lucene merge semantics — deleted docs'
     postings and norms are dropped while blocks are rewritten, the
     merged stats exclude them, and the purged ids leave the deletes
     files (they no longer exist anywhere). Deletes covering segments
-    NOT in this merge stay recorded."""
+    NOT in this merge stay recorded. A group whose every doc is deleted
+    is dropped: its sources are retired, its ids leave the deletes
+    files, no segment is published and None is returned."""
     t0 = time.monotonic()
     from . import deletes as del_mod
 
@@ -220,15 +223,20 @@ def merge_segments(
             r.doc_id for r in norms_src.join(dd, "doc_id").select("doc_id").collect()
         ]
         norms_src = norms_src.join(dd, "doc_id", "left_anti")
-    corpus = _write_norms(norms_src, paths["norms"])
-
-    manifest_row = seg.write_segment(
-        postings, index_dir, new_name, generation,
-        n_docs=int(corpus["n_docs"]), sum_dl=int(corpus["sum_dl"] or 0),
-        source="merge", started=t0,
-        with_positions=with_positions, with_offsets=with_offsets,
-        n_partitions=n_partitions, merged_from=segment_names,
-    )
+    if purged_ids and len(purged_ids) == sum(int(r["n_docs"]) for r in sources):
+        # every doc of the group is deleted: drop the group the way
+        # Lucene drops a fully deleted segment — retire the sources and
+        # publish nothing (no norms, postings or manifest row)
+        manifest_row = None
+    else:
+        corpus = _write_norms(norms_src, paths["norms"])
+        manifest_row = seg.write_segment(
+            postings, index_dir, new_name, generation,
+            n_docs=int(corpus["n_docs"]), sum_dl=int(corpus["sum_dl"] or 0),
+            source="merge", started=t0,
+            with_positions=with_positions, with_offsets=with_offsets,
+            n_partitions=n_partitions, merged_from=segment_names,
+        )
     if purged_ids:
         # purged ids are physically gone: rewrite the deletes files
         # keeping only ids that still exist in NON-merged segments
@@ -246,11 +254,15 @@ def merge_segments(
 def maybe_merge(
     spark: SparkSession, index_dir: str, merge_factor: int = 4, **kw
 ) -> list[dict]:
-    """Run the tiered policy until no merge is selected."""
+    """Run the tiered policy until no merge is selected. Returns the
+    manifest rows of the merges that published a segment (a fully
+    deleted group publishes none)."""
     done = []
     while True:
         merges = select_merges(seg.list_segments(index_dir), merge_factor)
         if not merges:
             return done
         for group in merges:
-            done.append(merge_segments(spark, index_dir, group, **kw))
+            row = merge_segments(spark, index_dir, group, **kw)
+            if row is not None:
+                done.append(row)

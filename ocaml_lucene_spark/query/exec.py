@@ -11,12 +11,16 @@ bm25_topk_auto routes between them with zero Spark jobs):
    terms whose posting lists span many partitions.
 
 2. ``bm25_topk_wand_parallel`` — block-max WAND (query/wand.py) with
-   lazy decode over contiguous doc ranges: one clipped pruning sweep
-   per range, exact union merge, bounded per-task memory. With one
-   range (``bm25_topk_wand_exec``, the router's ``wand`` plan) every
-   candidate block goes to ONE executor task, which for the common
-   case (few terms, k small) decodes a fraction of the blocks and
-   returns just the k result rows — payloads never touch the driver.
+   lazy decode over contiguous doc ranges: one Spark job of
+   ``spark.range(n_tasks)`` mapped by a pandas UDF, no shuffle. The task
+   for a range reads its own candidate blocks from the live postings
+   files with pyarrow (term and doc-range filters on the row-group
+   statistics, the block columns only), runs one clipped pruning sweep
+   and returns its local top-k; the union's top-k is exact. With one
+   range (``bm25_topk_wand_exec``, the router's ``wand`` plan) one task
+   reads every candidate block, which for the common case (few terms,
+   k small) decodes a fraction of them — payloads never touch the
+   driver.
 
 Both plans share one preamble (_prepare): N and avgdl from the
 manifest, per-term df from the in-memory FST term dictionaries
@@ -29,6 +33,7 @@ pure layout operation (tested).
 from __future__ import annotations
 
 import math
+import os
 from collections import namedtuple
 from typing import NamedTuple
 
@@ -50,6 +55,22 @@ def live_segment_paths(index_dir: str) -> list[str]:
         seg.segment_paths(index_dir, r["segment"])["postings"]
         for r in seg.list_segments(index_dir)
     ]
+
+
+def _live_postings_files(index_dir: str) -> list[str]:
+    """The live segments' postings files: the non-hidden ``*.parquet``
+    files in their directories (what Spark's parquet reader lists),
+    largest first and otherwise in listing order, the order Spark's file
+    scan gives its splits. The order is fixed because WAND's decode
+    counts depend on it: ties between posting lists at one doc break by
+    the order their terms' blocks arrive in."""
+    files = [
+        os.path.join(p, f)
+        for p in live_segment_paths(index_dir)
+        for f in sorted(os.listdir(p))
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+    return sorted(files, key=lambda f: -os.path.getsize(f))
 
 
 def global_stats(index_dir: str) -> dict:
@@ -725,10 +746,10 @@ def bm25_topk_wand_exec(
     min_should_match: int = 0,
 ) -> DataFrame:
     """Cluster-side block-max WAND in ONE executor task: the doc-range
-    plan (``bm25_topk_wand_parallel``) with a single range, so every
-    candidate block goes to one task, which returns only the k result
-    rows. The router's ``wand`` plan: right when the candidate set is
-    small (few query terms, k small); pruning is then global.
+    plan (``bm25_topk_wand_parallel``) with a single range, so one task
+    reads every candidate block and returns only the k result rows. The
+    router's ``wand`` plan: right when the candidate set is small (few
+    query terms, k small); pruning is then global.
 
     Arguments as for ``bm25_topk_wand_parallel``."""
     return bm25_topk_wand_parallel(
@@ -911,17 +932,31 @@ def bm25_topk_wand_parallel(
     path for hot term sets, between that and the distributed exhaustive
     scan (no pruning).
 
-    The doc space is cut into ``n_tasks`` contiguous ranges; every
-    candidate block ships to each range its [first_doc, last_doc]
-    intersects (hot/salted blocks are narrow — ~1 range each; only
-    rare terms' wide blocks replicate). Each task runs the full pruning
-    WAND clipped to its range (min_doc/max_doc: forward-only iterators
-    make the clip exact with no per-posting filtering) with lazy decode
-    and returns its LOCAL top-k; ranges partition the doc space, so
-    every doc is scored by exactly one task and the global top-k is the
-    top-k of the union (one tiny final sort over n_tasks*k rows).
-    Per-task memory is the blocks of one doc range — bounded however
-    hot the query is; packed payloads never touch the driver.
+    The doc space is cut into ``n_tasks`` contiguous ranges, and the
+    plan is ONE Spark job with no Exchange: ``spark.range(n_tasks)`` in
+    ``n_tasks`` partitions, mapped by a pandas UDF, then the final
+    TakeOrderedAndProject. The task for a range reads its own candidate
+    blocks with ``pyarrow.dataset`` from the live postings files (listed
+    once on the driver): the ``_WAND_BLOCK_COLS`` columns of blocks whose
+    term is in terms+exclude and whose [first_doc, last_doc] intersects
+    the range, with the predicate pruning row groups by their statistics
+    (the files are term-sorted). Hot/salted blocks are narrow, so ~1
+    range reads each; a rare term's wide block is read by every range it
+    intersects. Each task runs the full pruning WAND clipped to its range
+    (min_doc/max_doc: forward-only iterators make the clip exact with no
+    per-posting filtering) with lazy decode and returns its LOCAL top-k;
+    ranges partition the doc space, so every doc is scored by exactly one
+    task and the global top-k is the top-k of the union (one tiny final
+    sort over n_tasks*k rows). Per-task memory is the blocks of one doc
+    range — bounded however hot the query is; packed payloads never
+    touch the driver.
+
+    Scale cost: every range task opens the footer of every live postings
+    file (the row-group statistics are in the footers), so one query
+    reads n_tasks x files footers. A one-range query reads them all in
+    one task; at many segments times many ranges this is the plan's
+    fixed cost, which a per-segment term -> file pointer in the term
+    dictionary (the paper's doc_start_fp) would bound.
 
     Range sizing: each range seeds its own theta, so pruning quality
     scales with docs-per-range (measured on the 100k-doc bench corpus,
@@ -967,14 +1002,8 @@ def bm25_topk_wand_parallel(
         )
     n_tasks = max(1, min(n_tasks, span))
     width = -(-span // n_tasks)  # ceil
-    blocks = _postings_df(spark, index_dir, terms + exclude).select(
-        *_WAND_BLOCK_COLS
-    )
-    rid_first = F.floor((F.col("first_doc") - lo) / width).cast("int")
-    rid_last = F.floor((F.col("last_doc") - lo) / width).cast("int")
-    fanned = blocks.withColumn(
-        "rid", F.explode(F.sequence(rid_first, rid_last))
-    )
+    files = _live_postings_files(index_dir)
+    wanted = terms + exclude
 
     acc_decoded = spark.sparkContext.accumulator(0)
     acc_total = spark.sparkContext.accumulator(0)
@@ -984,9 +1013,21 @@ def bm25_topk_wand_parallel(
     deleted = deleted_ids(index_dir)
     inc_set, exc_set = set(terms), set(exclude)
 
-    def run_range(pdf):
-        rid = int(pdf["rid"].iloc[0])
-        rows = [_WandBlock(*t) for t in zip(*(pdf[c] for c in _WAND_BLOCK_COLS))]
+    def run_range(rid: int) -> pd.DataFrame:
+        import pyarrow.dataset as pads
+
+        r_lo = lo + rid * width
+        r_hi = r_lo + width - 1
+        blocks = pads.dataset(files, format="parquet").to_table(
+            columns=list(_WAND_BLOCK_COLS),
+            filter=pads.field("term").isin(wanted)
+            & (pads.field("first_doc") <= r_hi)
+            & (pads.field("last_doc") >= r_lo),
+        )
+        rows = [
+            _WandBlock(*t)
+            for t in zip(*(blocks.column(c).to_pylist() for c in _WAND_BLOCK_COLS))
+        ]
         lists = build_posting_lists(
             [r for r in rows if r.term in inc_set], idfs, avgdl
         )
@@ -999,8 +1040,7 @@ def bm25_topk_wand_parallel(
         out, m = block_max_wand(
             lists, k, require_all_terms=require, round_to=round_to,
             exclude_lists=xlists or None, term_order=terms,
-            min_doc=lo + rid * width,
-            max_doc=min(lo + (rid + 1) * width - 1, hi),
+            min_doc=r_lo, max_doc=min(r_hi, hi),
             min_should_match=min_should_match,
             exclude_doc_set=dset,
         )
@@ -1013,8 +1053,13 @@ def bm25_topk_wand_parallel(
             }
         )
 
-    locals_topk = fanned.groupBy("rid").applyInPandas(
-        run_range, "doc_id long, score double"
+    def run_ranges(batches):
+        for pdf in batches:
+            for rid in pdf["id"]:
+                yield run_range(int(rid))
+
+    locals_topk = spark.range(0, n_tasks, 1, n_tasks).mapInPandas(
+        run_ranges, "doc_id long, score double"
     )
     return locals_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 

@@ -88,6 +88,13 @@ def get_spark(
         # order — no result depends on which partition a row landed in.
         # (Partition-count-dependent things — docIDs, pack shards — use
         # hash partitioning, which this conf does not touch.)
+        # The cost is on retries: without the sort, a round-robin over
+        # an input whose row order is not fixed (a shuffle's output) is
+        # not reproducible, so Spark marks its stage INDETERMINATE, and
+        # a fetch failure re-runs that whole stage and every stage that
+        # read it, where a sorted repartition re-runs only the lost map
+        # tasks. A cluster that loses executors often pays that re-run
+        # instead of the 0.24 s.
         .config("spark.sql.execution.sortBeforeRepartition", "false")
         # PySpark 4 wraps every DataFrame/Column API call to capture
         # call-site context for error messages: getActiveSession + a

@@ -118,6 +118,48 @@ def test_add_after_purging_merge_keeps_doc_ids_disjoint(spark, tiny_corpus, tmp_
     _check(spark, index_dir, OracleIndex.from_texts(texts))
 
 
+@pytest.mark.parametrize("how", ["merge_segments", "maybe_merge"])
+def test_merge_drops_fully_deleted_segments(spark, tiny_corpus, tmp_path_factory, how):
+    """Lucene drops a segment whose every doc is deleted. A merge group
+    with no live doc retires its sources, takes their ids out of the
+    deletes files and publishes no segment (no manifest row, no
+    directory); maybe_merge returns only the merges that published one.
+    Queries then rank like the oracle over the remaining segment, whose
+    own deleted doc stays deleted."""
+    import os
+
+    from ocaml_lucene_spark.index.deletes import delete_docs, deleted_ids
+
+    index_dir = str(tmp_path_factory.mktemp(f"index_all_deleted_{how}"))
+    ranked = assign_doc_ids(spark.read.parquet(tiny_corpus)).select("doc_id", "text")
+    spans = [(0, 19), (20, 39), (40, 99)] if how == "maybe_merge" else [(0, 19), (40, 99)]
+    for a, b in spans:
+        build_index(ranked.filter(F.col("doc_id").between(a, b)), index_dir, n_partitions=2)
+    *gone, kept = [r["segment"] for r in list_segments(index_dir)]
+    gone_ids = [d for a, b in spans[:-1] for d in range(a, b + 1)]
+    delete_docs(index_dir, gone_ids + [50])
+
+    if how == "merge_segments":
+        assert merge_segments(spark, index_dir, gone, n_partitions=2) is None
+    else:
+        assert maybe_merge(spark, index_dir, merge_factor=2, n_partitions=2) == []
+    assert [r["segment"] for r in list_segments(index_dir)] == [kept]
+    assert sorted(os.listdir(os.path.join(index_dir, "segments"))) == sorted(gone + [kept])
+    assert deleted_ids(index_dir).tolist() == [50]
+
+    texts = {r.doc_id: r.text for r in ranked.filter(F.col("doc_id").between(40, 99)).collect()}
+    oracle = OracleIndex.from_texts(texts)
+    by_df = sorted(oracle.term_stats().items(), key=lambda kv: (-kv[1][0], kv[0]))
+    hot, mid = by_df[0][0], by_df[len(by_df) // 10][0]
+    for terms, mode in (([hot, mid], "or"), ([hot, mid], "and"), ([mid], "or")):
+        expected = [x for x in oracle.query(terms, mode, 11) if x[0] != 50][:10]
+        for plan in (bm25_topk_indexed, bm25_topk_wand_exec):
+            got = [(r.doc_id, r.score) for r in plan(spark, index_dir, terms, mode, 10).collect()]
+            assert [d for d, _ in got] == [d for d, _ in expected], (plan, terms, mode)
+            for (_, gs), (_, es) in zip(got, expected):
+                assert math.isclose(gs, es, rel_tol=1e-9)
+
+
 def test_select_merges_policy():
     mk = lambda n, b: {"segment": n, "bytes_packed": b, "status": "live"}  # noqa: E731
     segs = [mk("a", 100), mk("b", 120), mk("c", 110), mk("d", 130),

@@ -2,12 +2,13 @@
 
 Every plan reads df from the in-memory term dictionaries and the doc
 span from parquet footers, so planning runs no df job: a query that
-provably has no result starts no Spark job before collect(), and a
-wand-routed query runs only its postings scan's jobs — three on this
-index, where the terms-parquet df lookup it replaced cost three more,
-and two once the postings' parquet schema is known for the live
-segment set. The write path (build, add, merge) is pinned the same
-way."""
+provably has no result starts no Spark job before collect(). The WAND
+plan is one job: each range task reads its own blocks with pyarrow, so
+there is no postings scan to plan, no shuffle and no second stage,
+whatever the range count and however new the segment set. The indexed
+plan still scans through Spark and infers the postings' parquet schema
+once per segment set. The write path (build, add, merge) is pinned the
+same way."""
 
 import itertools
 
@@ -49,16 +50,61 @@ def _count_jobs(spark, make_df):
     return rows, planned, total
 
 
-def test_wand_routed_query_runs_three_jobs(spark, indexed):
+def test_wand_routed_query_runs_one_job(spark, indexed):
     index_dir, oracle, hot, mid = indexed
     decision: dict = {}
-    rows, _, total = _count_jobs(
+    rows, planned, total = _count_jobs(
         spark,
         lambda: qx.bm25_topk_auto(spark, index_dir, [hot, mid], "or", 10, decision=decision),
     )
     assert decision["plan"] == "wand"
     assert [d for d, _ in rows] == [d for d, _ in oracle.query([hot, mid], "or", 10)]
-    assert total <= 3, total
+    assert planned == 0 and total == 1, (planned, total)
+
+
+def test_parallel_wand_runs_one_job(spark, indexed):
+    index_dir, oracle, hot, mid = indexed
+    rows, planned, total = _count_jobs(
+        spark,
+        lambda: qx.bm25_topk_wand_parallel(
+            spark, index_dir, [hot, mid], "or", 10, n_tasks=4
+        ),
+    )
+    assert [d for d, _ in rows] == [d for d, _ in oracle.query([hot, mid], "or", 10)]
+    assert planned == 0 and total == 1, (planned, total)
+
+
+def test_wand_first_query_after_segment_set_change_runs_one_job(
+    spark, indexed, tmp_path_factory
+):
+    """A new segment costs the WAND plan no schema or listing job: the
+    first query over the grown index is still one job, and scores with
+    the new segment's stats and blocks."""
+    import shutil
+
+    from ocaml_lucene_spark.index.build import add_documents
+    from ocaml_lucene_spark.sources.corpus import generate_corpus
+
+    index_dir = str(tmp_path_factory.mktemp("index_jobs_grow") / "idx")
+    shutil.copytree(indexed[0], index_dir)
+    _, _, hot, mid = indexed
+    before = qx.bm25_topk_wand_exec(spark, index_dir, [hot, mid], "or", 10).collect()
+    extra = generate_corpus(str(tmp_path_factory.mktemp("grow")), n_docs=200, seed=44)
+    add_documents(spark.read.parquet(extra), index_dir, n_partitions=2)
+    got = []
+    for plan in (
+        lambda: qx.bm25_topk_wand_exec(spark, index_dir, [hot, mid], "or", 10),
+        lambda: qx.bm25_topk_wand_parallel(spark, index_dir, [hot, mid], "or", 10, n_tasks=4),
+    ):
+        rows, planned, total = _count_jobs(spark, plan)
+        assert planned == 0 and total == 1, (planned, total)
+        got.append(rows)
+    expect = [
+        (r.doc_id, r.score)
+        for r in qx.bm25_topk_indexed(spark, index_dir, [hot, mid], "or", 10).collect()
+    ]
+    assert expect != [(r.doc_id, r.score) for r in before]
+    assert got == [expect, expect]
 
 
 def test_postings_schema_is_inferred_once_per_segment_set(spark, indexed):
@@ -66,13 +112,43 @@ def test_postings_schema_is_inferred_once_per_segment_set(spark, indexed):
 
     def run():
         return _count_jobs(
-            spark, lambda: qx.bm25_topk_wand_exec(spark, index_dir, [hot, mid], "or", 10)
+            spark, lambda: qx.bm25_topk_indexed(spark, index_dir, [hot, mid], "or", 10)
         )
 
     run()
     rows, planned, total = run()
     assert [d for d, _ in rows] == [d for d, _ in oracle.query([hot, mid], "or", 10)]
     assert planned == 0 and total <= 2, (planned, total)
+
+
+def test_parallel_wand_total_blocks_counts_block_range_intersections(spark, indexed):
+    """Each range task reads exactly the blocks its doc range
+    intersects: total_blocks over 4 ranges equals the (block, range)
+    intersections counted from the postings table itself."""
+    from ocaml_lucene_spark.index import segments as seg
+
+    index_dir, oracle, hot, mid = indexed
+    metrics: dict = {}
+    rows = qx.bm25_topk_wand_parallel(
+        spark, index_dir, [hot, mid], "or", 10, n_tasks=4, metrics=metrics
+    ).collect()
+    qx.wand_metrics_value(metrics)
+    assert [r.doc_id for r in rows] == [d for d, _ in oracle.query([hot, mid], "or", 10)]
+
+    lo, hi = seg.doc_bounds(index_dir)
+    width = -(-(hi - lo + 1) // 4)
+    blocks = (
+        spark.read.parquet(*qx.live_segment_paths(index_dir))
+        .select("term", "first_doc", "last_doc")
+        .toPandas()
+    )
+    blocks = blocks[blocks["term"].isin([hot, mid])]
+    expect = sum(
+        int(((blocks["first_doc"] <= r_lo + width - 1) & (blocks["last_doc"] >= r_lo)).sum())
+        for r_lo in (lo + rid * width for rid in range(4))
+    )
+    assert expect > len(blocks) > 0  # some block spans two ranges
+    assert metrics["total_blocks"] == expect, (metrics, expect)
 
 
 def test_indexed_plan_runs_no_df_job(spark, indexed):

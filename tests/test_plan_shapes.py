@@ -91,8 +91,8 @@ def test_exhaustive_plan_never_reads_position_streams(spark, built_offsets):
 
 
 def test_wand_metadata_projection_prunes_payloads(spark, built):
-    """WAND block selection (skip metadata only) must not read the
-    packed payload columns."""
+    """A metadata-only select over the postings scan (skip metadata
+    only) must not read the packed payload columns."""
     from ocaml_lucene_spark.query.exec import _postings_df
 
     df = _postings_df(spark, built, ["zipf"]).select(
@@ -702,3 +702,18 @@ def test_complete_context_pushes_lang_and_takes_ordered(spark):
     plan = _plan(complete_context(docs, "s", "de", k=10))
     assert re.search(r"PushedFilters: \[.*EqualTo\(lang,de\).*\]", plan), plan
     assert "TakeOrderedAndProject" in plan, plan
+
+
+@pytest.mark.parametrize("n_tasks", [1, 4])
+def test_wand_plan_is_one_stage_without_exchange(spark, built, n_tasks):
+    """The WAND plan's range tasks read their own blocks: below the
+    final TakeOrderedAndProject there is no Exchange (no postings
+    shuffle to the ranges) and no grouped pandas UDF."""
+    from ocaml_lucene_spark.query.exec import bm25_topk_wand_parallel
+
+    plan = _plan(
+        bm25_topk_wand_parallel(spark, built, ["zipf", "data"], "or", 10, n_tasks=n_tasks)
+    )
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan, plan
+    assert "MapInPandas" in plan and "Scan parquet" not in plan, plan

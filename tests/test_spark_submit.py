@@ -2,10 +2,12 @@
 ``spark-submit --py-files <zip>`` with NO repo on the python path —
 driver and executors import the package from the packaged zip alone.
 
-The job builds a real index from a generated webtext corpus and runs a
-BM25 top-k query; the test asserts its output matches the same
-computation done in-process, proving the zip is complete (no module
-silently leaking in from the working tree)."""
+The job builds a real index from a generated webtext corpus and runs
+BM25 top-k queries through the indexed plan and the WAND plan, whose
+range tasks read their postings blocks with pyarrow on the executors,
+with one range and with two; the test asserts the output matches the
+same computation done in-process, proving the zip is complete (no
+module silently leaking in from the working tree)."""
 
 import json
 import os
@@ -19,7 +21,9 @@ import json, sys
 from pyspark.sql import SparkSession
 
 from ocaml_lucene_spark.index.build import assign_doc_ids, build_index
-from ocaml_lucene_spark.query.exec import bm25_topk_indexed
+from ocaml_lucene_spark.query.exec import (
+    bm25_topk_indexed, bm25_topk_wand_exec, bm25_topk_wand_parallel,
+)
 
 corpus, index_dir, out_path = sys.argv[1], sys.argv[2], sys.argv[3]
 spark = (
@@ -32,11 +36,18 @@ docs = assign_doc_ids(
     spark.read.parquet(corpus).select("url", "text")
 ).select("doc_id", "text")
 build_index(docs, index_dir, segment="sub", n_partitions=4)
-rows = bm25_topk_indexed(
-    spark, index_dir, ["the", "and"], "or", 10, round_to=4
-).collect()
+plans = {
+    "indexed": bm25_topk_indexed(spark, index_dir, ["the", "and"], "or", 10, round_to=4),
+    "wand": bm25_topk_wand_exec(spark, index_dir, ["the", "and"], "or", 10, round_to=4),
+    "parallel": bm25_topk_wand_parallel(
+        spark, index_dir, ["the", "and"], "or", 10, round_to=4, n_tasks=2
+    ),
+}
 with open(out_path, "w") as f:
-    json.dump([[r.doc_id, r.score] for r in rows], f)
+    json.dump(
+        {name: [[r.doc_id, r.score] for r in df.collect()] for name, df in plans.items()},
+        f,
+    )
 spark.stop()
 '''
 
@@ -83,22 +94,32 @@ def test_spark_submit_py_files_runs_build_and_query(spark, tmp_path_factory):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     with open(out_path) as f:
-        got = [(int(d), float(s)) for d, s in json.load(f)]
-    assert len(got) == 10
+        got = {
+            name: [(int(d), float(s)) for d, s in rows]
+            for name, rows in json.load(f).items()
+        }
+    assert [len(rows) for rows in got.values()] == [10, 10, 10]
 
     # in-process oracle: same corpus, same query, repo code
     from ocaml_lucene_spark.index.build import assign_doc_ids, build_index
-    from ocaml_lucene_spark.query.exec import bm25_topk_indexed
+    from ocaml_lucene_spark.query.exec import (
+        bm25_topk_indexed,
+        bm25_topk_wand_exec,
+        bm25_topk_wand_parallel,
+    )
 
     docs = assign_doc_ids(
         spark.read.parquet(corpus).select("url", "text")
     ).select("doc_id", "text")
     idx2 = str(base / "idx_oracle")
     build_index(docs, idx2, segment="sub", n_partitions=4)
-    expect = [
-        (r.doc_id, r.score)
-        for r in bm25_topk_indexed(
-            spark, idx2, ["the", "and"], "or", 10, round_to=4
-        ).collect()
-    ]
+    args = (spark, idx2, ["the", "and"], "or", 10)
+    expect = {
+        name: [(r.doc_id, r.score) for r in df.collect()]
+        for name, df in {
+            "indexed": bm25_topk_indexed(*args, round_to=4),
+            "wand": bm25_topk_wand_exec(*args, round_to=4),
+            "parallel": bm25_topk_wand_parallel(*args, round_to=4, n_tasks=2),
+        }.items()
+    }
     assert got == expect
