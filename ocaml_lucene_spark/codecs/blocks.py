@@ -12,8 +12,11 @@ metadata replaces Lucene's interleaved multi-level skip lists and also
 carries what block-max WAND needs (upper-bounding BM25 via max_tf and
 min_dl, both monotone in the score).
 
-In the Spark engine these functions run inside applyInPandas /
-mapInPandas over numpy arrays — never per-row Python in the driver.
+Every postings reader decodes through ``decode_postings``: one Arrow
+batch of block rows at a time (under mapInArrow, or over a pyarrow read
+on the driver), into numpy columns. The per-block ``decode_*`` helpers
+are the reference it is tested against, and WAND's lazy single-block
+decode.
 """
 
 from __future__ import annotations
@@ -158,13 +161,81 @@ def decode_positions(pos_bytes: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     return [np.cumsum(deltas[offsets[i] : offsets[i + 1]]) for i in range(len(tfs))]
 
 
-def decode_flat_stream(data: bytes, tfs: np.ndarray) -> np.ndarray:
-    """Vectorized flat decode of a per-doc-delta stream (positions or
-    offsets): one cumsum minus a repeated per-doc base — no Python
-    lists, no per-doc loop."""
-    tf = np.asarray(tfs, dtype=np.int64)
-    deltas = stream_decode(data).astype(np.int64)
-    c = np.cumsum(deltas)
-    starts = np.concatenate([[0], np.cumsum(tf)])[:-1]
-    base = c[starts] - deltas[starts]
-    return c - np.repeat(base, tf)
+def isin_sorted(docs: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
+    """Boolean mask of the ``docs`` found in the ascending array
+    ``sorted_ids``: one searchsorted, no sort of ``docs``."""
+    if not sorted_ids.size:
+        return np.zeros(docs.size, dtype=bool)
+    at = np.minimum(np.searchsorted(sorted_ids, docs), sorted_ids.size - 1)
+    return sorted_ids[at] == docs
+
+
+# the per-occurrence streams: column -> (decoded name, the error when a
+# build without that index option left the column null)
+_OCCURRENCE_STREAMS = {
+    "pos_bytes": ("positions", "index was built without positions"),
+    "off_bytes": ("starts", "index was built without offsets"),
+}
+
+
+def _concat(parts: list[np.ndarray]) -> np.ndarray:
+    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.int64)
+
+
+def decode_postings(batch, deleted: np.ndarray | None = None) -> dict[str, np.ndarray]:
+    """The block decoder every postings reader shares: one Arrow
+    RecordBatch of postings-parquet block rows -> numpy int64 columns
+    concatenated over the whole batch, in block-row then posting order.
+
+    Decodes whichever streams the batch carries: ``doc_bytes`` ->
+    ``doc_id`` (always), ``tf_bytes`` -> ``tf``, ``dl_bytes`` -> ``dl``,
+    ``pos_bytes`` -> ``positions`` and ``off_bytes`` -> ``starts`` (both
+    flat, one value per occurrence; a posting's count is its tf, so
+    either needs ``tf_bytes``). ``row`` is each posting's row index in
+    the batch. Postings of the docs in the ascending ``deleted`` ids are
+    dropped, their occurrences with them. A null ``off_bytes`` or
+    ``pos_bytes`` raises ValueError naming the index option it needs
+    (offsets are checked first)."""
+    names = set(batch.schema.names)
+    flat = [c for c in ("off_bytes", "pos_bytes") if c in names]
+    for col in flat:
+        if batch.column(col).null_count:
+            raise ValueError(_OCCURRENCE_STREAMS[col][1])
+    doc_blocks = [delta_decode(b) for b in batch.column("doc_bytes").to_pylist()]
+    counts = np.array([d.size for d in doc_blocks], dtype=np.int64)
+    out = {
+        "row": np.repeat(np.arange(counts.size, dtype=np.int64), counts),
+        "doc_id": _concat(doc_blocks),
+    }
+    ns = counts.tolist()
+    for col, name in (("tf_bytes", "tf"), ("dl_bytes", "dl")):
+        if col in names:
+            out[name] = _concat(
+                [pfor.decode(b, n) for b, n in zip(batch.column(col).to_pylist(), ns)]
+            ).astype(np.int64)
+    if flat:
+        tf = out["tf"]
+        first = np.concatenate([[0], np.cumsum(tf)])[:-1]  # each doc's first occurrence
+    for col in flat:
+        # within-doc deltas, each doc's first value absolute: the
+        # values are a running sum less the sum before the doc's first
+        deltas = _concat([stream_decode(b) for b in batch.column(col).to_pylist()])
+        deltas = deltas.astype(np.int64)
+        c = np.cumsum(deltas)
+        out[_OCCURRENCE_STREAMS[col][0]] = c - np.repeat(c[first] - deltas[first], tf)
+    if deleted is not None:
+        keep = ~isin_sorted(out["doc_id"], deleted)
+        if not keep.all():
+            occ = np.repeat(keep, out["tf"]) if flat else None
+            out = {k: v[occ if k in ("positions", "starts") else keep] for k, v in out.items()}
+    return out
+
+
+def occurrence_lists(values: np.ndarray, tf: np.ndarray):
+    """A flat per-occurrence column of decode_postings (positions or
+    starts) as an Arrow list<int64> column, one list of tf values per
+    posting."""
+    import pyarrow as pa
+
+    offsets = pa.array(np.concatenate([[0], np.cumsum(tf)]), pa.int32())
+    return pa.ListArray.from_arrays(offsets, pa.array(values, pa.int64()))

@@ -7,10 +7,11 @@ grouped into size tiers and the smallest ``merge_factor`` segments of
 an over-full tier are merged into one.
 
 Merge = decode the candidate segments' blocks (``decode_blocks`` under
-mapInArrow: one batch of blocks decodes into concatenated numpy arrays,
-deleted docs drop with one isin, salted rows re-bucket over the merged
-doc span) -> the union of the source norms less the purged docs (an
-anti-join with deletes.deleted_frame, built in the JVM), written by
+mapInArrow: codecs.blocks.decode_postings, the block decoder every
+postings reader shares, turns one batch of blocks into concatenated
+numpy columns less the purged docs; salted rows then re-bucket over the
+merged doc span) -> the union of the source norms less the purged docs
+(an anti-join with deletes.deleted_frame, built in the JVM), written by
 build's norms writer, whose Observation gives n_docs/sum_dl ->
 segments.write_segment, the same writer build and import end in (one
 hash shuffle on (term, salt), JVM sort, mapInArrow pack that also
@@ -67,80 +68,41 @@ def decode_blocks(
     with_offsets: bool,
 ):
     """Merge's decode kernel: one Arrow batch of packed block rows
-    (term, block_no, n, doc_bytes, tf_bytes, dl_bytes[, pos_bytes]
+    (term, block_no, doc_bytes, tf_bytes, dl_bytes[, pos_bytes]
     [, off_bytes]) -> one RecordBatch of postings rows (term, salt,
     doc_id, tf, dl[, positions][, starts]); None when no row is left.
 
-    Each block's streams decode into numpy arrays that are concatenated
-    over the whole batch, so every step after the decode is one numpy
-    or Arrow call per batch. Docs in the sorted ``deleted`` ids (None:
-    purge nothing) are dropped. Rows of a salted block (block_no >=
-    100_000) re-bucket over the merged doc span [lo, lo + span) into
-    salts 1..n_salts, so the merged segment keeps doc-contiguous salt
-    ranges; every other row stays salt 0 (one run, fewer blocks)."""
+    The streams decode through codecs.blocks.decode_postings, which
+    drops the docs in the sorted ``deleted`` ids (None: purge nothing).
+    Rows of a salted block (block_no >= 100_000) re-bucket over the
+    merged doc span [lo, lo + span) into salts 1..n_salts, so the merged
+    segment keeps doc-contiguous salt ranges; every other row stays
+    salt 0 (one run, fewer blocks)."""
     import pyarrow as pa
 
-    from ..codecs import pfor
-    from ..codecs.blocks import decode_flat_stream
-    from ..codecs.delta import delta_decode
+    from ..codecs.blocks import decode_postings, occurrence_lists
 
-    counts = batch.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-    if not counts.size:
+    streams = ["doc_bytes", "tf_bytes", "dl_bytes"]
+    streams += ["pos_bytes"] if with_positions else []
+    streams += ["off_bytes"] if with_offsets else []
+    d = decode_postings(batch.select(streams), deleted)
+    docs, row = d["doc_id"], d["row"]
+    if not docs.size:
         return None
-    ns = counts.tolist()
-    docs = np.concatenate(
-        [delta_decode(b) for b in batch.column("doc_bytes").to_pylist()]
-    )
-    tf = np.concatenate(
-        [pfor.decode(b, c) for b, c in zip(batch.column("tf_bytes").to_pylist(), ns)]
-    ).astype(np.int64)
-    dl = np.concatenate(
-        [pfor.decode(b, c) for b, c in zip(batch.column("dl_bytes").to_pylist(), ns)]
-    ).astype(np.int64)
-    block_of = np.repeat(np.arange(counts.size), counts)
-    salted = (
-        batch.column("block_no").to_numpy(zero_copy_only=False) // 100_000 > 0
-    )[block_of]
-    block_tfs = np.split(tf, np.cumsum(counts)[:-1])
-
-    def flat(name):
-        """One per-occurrence stream (positions or offsets) of every
-        block, concatenated."""
-        return np.concatenate(
-            [
-                decode_flat_stream(b, t)
-                for b, t in zip(batch.column(name).to_pylist(), block_tfs)
-            ]
-        )
-
-    lists = {}
-    if with_positions:
-        lists["positions"] = flat("pos_bytes")
-    if with_offsets:
-        # the offsets stream shares the positions framing
-        lists["starts"] = flat("off_bytes")
-    if deleted is not None:
-        keep = ~np.isin(docs, deleted)
-        if not keep.all():
-            occ_keep = np.repeat(keep, tf)
-            lists = {k: v[occ_keep] for k, v in lists.items()}
-            docs, tf, dl = docs[keep], tf[keep], dl[keep]
-            salted, block_of = salted[keep], block_of[keep]
-            if not docs.size:
-                return None
+    salted = (batch.column("block_no").to_numpy(zero_copy_only=False) // 100_000 > 0)[row]
     salt = np.where(
         salted, 1 + np.minimum(n_salts - 1, (docs - lo) * n_salts // span), 0
     )
     cols = {
-        "term": batch.column("term").take(pa.array(block_of)),
+        "term": batch.column("term").take(pa.array(row)),
         "salt": pa.array(salt, pa.int32()),
         "doc_id": pa.array(docs),
-        "tf": pa.array(tf),
-        "dl": pa.array(dl),
+        "tf": pa.array(d["tf"]),
+        "dl": pa.array(d["dl"]),
     }
-    offsets = pa.array(np.concatenate([[0], np.cumsum(tf)]), pa.int32())
-    for k, v in lists.items():
-        cols[k] = pa.ListArray.from_arrays(offsets, pa.array(v, pa.int64()))
+    for k in ("positions", "starts"):
+        if k in d:
+            cols[k] = occurrence_lists(d[k], d["tf"])
     return pa.RecordBatch.from_pydict(cols)
 
 
@@ -189,7 +151,7 @@ def merge_segments(
     bounds = seg.doc_bounds(index_dir, segment_names)
     m_lo, m_span = (bounds[0], bounds[1] - bounds[0] + 1) if bounds else (0, 1)
 
-    cols = ["term", "block_no", "n", "doc_bytes", "tf_bytes", "dl_bytes"]
+    cols = ["term", "block_no", "doc_bytes", "tf_bytes", "dl_bytes"]
     cols += ["pos_bytes"] if with_positions else []
     cols += ["off_bytes"] if with_offsets else []
     pos_schema = (

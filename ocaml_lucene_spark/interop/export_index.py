@@ -581,83 +581,73 @@ def export_lucene_index(
     """
     import pyarrow.parquet as pq
 
-    from ..codecs import pfor
-    from ..codecs.blocks import decode_positions
-    from ..codecs.delta import delta_decode
+    from ..codecs.blocks import decode_postings
     from ..index import segments as seg_mod
     from ..index.deletes import deleted_ids
 
     segs = seg_mod.list_segments(index_dir, live_only=True)
     if not segs:
         raise ValueError(f"no live segments in {index_dir}")
-    deleted = deleted_ids(index_dir)
-    dropped = np.asarray(deleted, dtype=np.int64) if len(deleted) else None
-
-    chunks: dict[str, list[tuple[np.ndarray, np.ndarray, list | None]]] = {}
-    n_postings = 0
-    with_positions: set[bool] = set()
-    offsets_seen = False
-    for row in segs:
-        paths = seg_mod.segment_paths(index_dir, row["segment"])
-        st = seg_mod.read_stats(index_dir, row["segment"])
-        table = pq.read_table(paths["postings"])
-        # the parquet schema always carries pos_bytes (null when the
-        # build had no positions) — stats.json is the truth, as in
-        # index/merge.py
-        has_pos = bool(st.get("with_positions"))
-        with_positions.add(has_pos)
-        offsets_seen = offsets_seen or bool(st.get("with_offsets"))
-        for batch in table.to_batches():
-            d = batch.to_pydict()
-            for i in range(batch.num_rows):
-                docs = delta_decode(bytes(d["doc_bytes"][i]))
-                n = int(d["n"][i])
-                tfs = pfor.decode(bytes(d["tf_bytes"][i]), n).astype(np.int64)
-                poss = (
-                    decode_positions(bytes(d["pos_bytes"][i]), tfs)
-                    if has_pos
-                    else None
-                )
-                if dropped is not None:
-                    keep = ~np.isin(docs, dropped)
-                    if not keep.all():
-                        if poss is not None:
-                            poss = [p for p, k in zip(poss, keep) if k]
-                        docs, tfs = docs[keep], tfs[keep]
-                        if not docs.size:
-                            continue
-                n_postings += int(docs.size)
-                if n_postings > max_postings:
-                    raise ValueError(
-                        f"index exceeds max_postings={max_postings}; "
-                        "export per-partition directories instead "
-                        "(see export_index module docstring)"
-                    )
-                chunks.setdefault(d["term"][i], []).append((docs, tfs, poss))
+    # the parquet schema always carries pos_bytes (null when the build
+    # had no positions) — stats.json is the truth, as in index/merge.py
+    src_stats = [seg_mod.read_stats(index_dir, r["segment"]) for r in segs]
+    with_positions = {bool(st.get("with_positions")) for st in src_stats}
     if len(with_positions) > 1:
         raise ValueError(
             "segments disagree on positions — merge the index first"
         )
     has_pos = with_positions == {True}
+    offsets_seen = any(bool(st.get("with_offsets")) for st in src_stats)
+    deleted = deleted_ids(index_dir)
+    dropped = deleted if len(deleted) else None
+    cols = ["term", "doc_bytes", "tf_bytes"] + (["pos_bytes"] if has_pos else [])
+
+    code: dict[str, int] = {}  # term -> first-seen code
+    codes_l, docs_l, tfs_l, poss_l = [], [], [], []
+    n_postings = 0
+    for row in segs:
+        path = seg_mod.segment_paths(index_dir, row["segment"])["postings"]
+        for batch in pq.read_table(path, columns=cols).to_batches():
+            d = decode_postings(batch, dropped)
+            if not d["doc_id"].size:
+                continue
+            n_postings += int(d["doc_id"].size)
+            if n_postings > max_postings:
+                raise ValueError(
+                    f"index exceeds max_postings={max_postings}; "
+                    "export per-partition directories instead "
+                    "(see export_index module docstring)"
+                )
+            row_code = np.array(
+                [code.setdefault(t, len(code)) for t in batch.column("term").to_pylist()],
+                dtype=np.int64,
+            )
+            codes_l.append(row_code[d["row"]])
+            docs_l.append(d["doc_id"])
+            tfs_l.append(d["tf"])
+            if has_pos:
+                poss_l += np.split(d["positions"], np.cumsum(d["tf"])[:-1])
 
     # dense ordinal remap over every posting-bearing global doc id
-    all_ids = np.unique(
-        np.concatenate([c[0] for cs in chunks.values() for c in cs])
-    )
+    docs = np.concatenate(docs_l)
+    all_ids = np.unique(docs)
+    names = sorted(code)
+    rank = np.empty(len(names), dtype=np.int64)
+    rank[[code[t] for t in names]] = np.arange(len(names))
+    term_rank = rank[np.concatenate(codes_l)]
+    order = np.lexsort((docs, term_rank))
+    bounds = np.searchsorted(term_rank[order], np.arange(len(names) + 1))
+    tfs = np.concatenate(tfs_l)
     postings = []
-    for term in sorted(chunks):
-        cs = chunks[term]
-        docs = np.concatenate([c[0] for c in cs])
-        order = np.argsort(docs, kind="stable")
-        docs = docs[order]
-        if docs.size > 1 and np.any(np.diff(docs) <= 0):
+    for i, term in enumerate(names):
+        idx = order[bounds[i] : bounds[i + 1]]
+        if not idx.size:  # every posting of the term was deleted
+            continue
+        term_docs = docs[idx]
+        if term_docs.size > 1 and np.any(np.diff(term_docs) <= 0):
             raise ValueError(f"term {term!r}: duplicate doc ids across blocks")
-        ords = np.searchsorted(all_ids, docs).astype(np.int64)
-        if has_pos:
-            flat = [p for c in cs for p in c[2]]
-            payload = [flat[k] for k in order.tolist()]
-        else:
-            payload = np.concatenate([c[1] for c in cs])[order]
+        ords = np.searchsorted(all_ids, term_docs).astype(np.int64)
+        payload = [poss_l[k] for k in idx.tolist()] if has_pos else tfs[idx]
         postings.append((term.encode("utf-8"), ords, payload))
 
     result = write_lucene_directory(
@@ -707,10 +697,9 @@ def export_lucene_partitions(
     Returns one summary dict per directory (driver-side, tiny).
     """
     import pandas as pd
+    import pyarrow as pa
 
-    from ..codecs import pfor
-    from ..codecs.blocks import decode_positions
-    from ..codecs.delta import delta_decode
+    from ..codecs.blocks import decode_postings, occurrence_lists
     from ..index import segments as seg_mod
     from ..index.deletes import deleted_ids
 
@@ -720,64 +709,41 @@ def export_lucene_partitions(
     src_stats = [seg_mod.read_stats(index_dir, s["segment"]) for s in segs]
     with_positions = all(bool(st.get("with_positions")) for st in src_stats)
     deleted = deleted_ids(index_dir)
-    bc_deleted = spark.sparkContext.broadcast(
-        np.asarray(deleted, dtype=np.int64) if len(deleted) else None
-    )
+    bc_deleted = spark.sparkContext.broadcast(deleted if len(deleted) else None)
 
     posting_paths = [
         seg_mod.segment_paths(index_dir, s["segment"])["postings"] for s in segs
     ]
-    norms_paths = [
-        seg_mod.segment_paths(index_dir, s["segment"])["norms"] for s in segs
-    ]
-    from pyspark.sql import functions as F
-
-    lo, hi = (
-        spark.read.parquet(*norms_paths)
-        .agg(F.min("doc_id"), F.max("doc_id"))
-        .first()
-    )
-    lo, span = int(lo), int(hi) - int(lo) + 1
+    # the doc span from the norms footers: driver-side, no Spark job
+    lo, hi = seg_mod.doc_bounds(index_dir)
+    span = hi - lo + 1
     n_dirs = max(1, min(n_directories, span))
 
+    cols = ["term", "doc_bytes", "tf_bytes"] + (["pos_bytes"] if with_positions else [])
     flat_schema = "bucket int, term string, doc_id long, tf long" + (
         ", positions array<long>" if with_positions else ""
     )
 
     def unpack(batches):
         dropped = bc_deleted.value
-        for pdf in batches:
-            outs = []
-            for term, n, db, tb, pb in zip(
-                pdf["term"], pdf["n"], pdf["doc_bytes"], pdf["tf_bytes"],
-                pdf["pos_bytes"],
-            ):
-                docs = delta_decode(bytes(db))
-                tfs = pfor.decode(bytes(tb), int(n)).astype(np.int64)
-                poss = (
-                    decode_positions(bytes(pb), tfs) if with_positions else None
-                )
-                if dropped is not None:
-                    keep = ~np.isin(docs, dropped)
-                    if not keep.all():
-                        if poss is not None:
-                            poss = [p for p, k in zip(poss, keep) if k]
-                        docs, tfs = docs[keep], tfs[keep]
-                        if not docs.size:
-                            continue
-                d = {
-                    "bucket": ((docs - lo) * n_dirs // span).astype(np.int32),
-                    "term": term,
-                    "doc_id": docs,
-                    "tf": tfs,
-                }
-                if with_positions:
-                    d["positions"] = poss
-                outs.append(pd.DataFrame(d))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+        for rb in batches:
+            d = decode_postings(rb, dropped)
+            docs = d["doc_id"]
+            if not docs.size:
+                continue
+            out = {
+                "bucket": pa.array(((docs - lo) * n_dirs // span).astype(np.int32)),
+                "term": rb.column("term").take(pa.array(d["row"])),
+                "doc_id": pa.array(docs),
+                "tf": pa.array(d["tf"]),
+            }
+            if with_positions:
+                out["positions"] = occurrence_lists(d["positions"], d["tf"])
+            yield pa.RecordBatch.from_pydict(out)
 
-    flat = spark.read.parquet(*posting_paths).mapInPandas(unpack, flat_schema)
+    flat = (
+        spark.read.parquet(*posting_paths).select(*cols).mapInArrow(unpack, flat_schema)
+    )
 
     out_schema = (
         "bucket int, out_dir string, n_terms long, n_docs long, "

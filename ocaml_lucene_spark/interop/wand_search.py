@@ -56,7 +56,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from ..oracle import B, K1
-from ..query.wand import PostingList, block_max_wand
+from ..query.wand import PostingList, block_max_wand, bm25_scores
 from .norms import byte4_to_int
 from .open_index import LuceneIndex, SegmentReader
 from .postings_stream import (
@@ -115,22 +115,13 @@ class LuceneTermList(PostingList):
         docs = base_doc + np.cumsum(deltas.astype(np.int64))
         tf = freqs.astype(np.float64)
         dl = self.dl_by_doc[docs]
-        scores = (
-            self.idf
-            * tf
-            * (K1 + 1.0)
-            / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
-        )
-        return docs, scores
+        return docs, bm25_scores(self.idf, tf, dl, self.avgdl)
 
 
 def _eager_payload(docs, freqs, idf, dl_by_doc, avgdl):
     tf = freqs.astype(np.float64)
     dl = dl_by_doc[docs]
-    scores = (
-        idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-    )
-    return ("eager", docs, scores)
+    return ("eager", docs, bm25_scores(idf, tf, dl, avgdl))
 
 
 def _segment_dl(seg: SegmentReader, field: str) -> np.ndarray:
@@ -362,12 +353,7 @@ def bm25_topk_exhaustive(
                 docs, freqs = read_term_postings(data, state, flags)
             tf = freqs.astype(np.float64)
             dl = dl_by_doc[docs]
-            scores = (
-                idfs[t]
-                * tf
-                * (K1 + 1.0)
-                / (tf + K1 * (1.0 - B + B * dl / avgdl))
-            )
+            scores = bm25_scores(idfs[t], tf, dl, avgdl)
             for d, s in zip((docs + doc_base).tolist(), scores.tolist()):
                 per_doc.setdefault(d, {})[t] = s
         doc_base += seg.segment_info["doc_count"]

@@ -6,7 +6,8 @@ bm25_topk_auto routes between them with zero Spark jobs):
 1. ``bm25_topk_indexed`` — distributed exhaustive: parquet scan of the
    query terms' blocks (term predicate pushes to row groups via the
    term-sorted zone maps; payload columns pruned until needed) ->
-   mapInPandas numpy decode + per-posting float64 score ->
+   mapInArrow batch decode (codecs.blocks.decode_postings, the block
+   decoder every postings reader shares) + per-posting float64 score ->
    groupBy(doc_id) agg -> TakeOrderedAndProject(k). Scales to hot
    terms whose posting lists span many partitions.
 
@@ -39,15 +40,24 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..codecs.blocks import decode_postings, isin_sorted
 from ..index import segments as seg
 from ..index.deletes import deleted_ids, drop_deleted
 from ..oracle import B, K1
 from .term_index import dir_token, doc_freqs_mem
-from .wand import DeletedDocSet, PostingList, block_max_wand, frontier_ub, tfn_ub
+from .wand import (
+    DeletedDocSet,
+    PostingList,
+    block_max_wand,
+    bm25_scores,
+    frontier_ub,
+    tfn_ub,
+)
 
 
 def live_segment_paths(index_dir: str) -> list[str]:
@@ -147,33 +157,39 @@ def _postings_df(spark: SparkSession, index_dir: str, terms: list[str]) -> DataF
     )
 
 
+def _map_blocks(
+    spark: SparkSession,
+    index_dir: str,
+    terms: list[str],
+    cols: list[str],
+    kernel,
+    schema: str,
+) -> DataFrame:
+    """``kernel`` under mapInArrow over the live postings blocks of
+    ``terms``, reading only ``cols`` (the term predicate pushes to row
+    groups). The kernel maps one Arrow batch of block rows to one output
+    RecordBatch, decoding with codecs.blocks.decode_postings; empty
+    outputs are dropped."""
+    blocks = _postings_df(spark, index_dir, list(dict.fromkeys(terms))).select(*cols)
+
+    def run(batches):
+        for rb in batches:
+            out = kernel(rb)
+            if out.num_rows:
+                yield out
+
+    return blocks.mapInArrow(run, schema)
+
+
 def term_doc_ids_df(
     spark: SparkSession, index_dir: str, terms: list[str]
 ) -> DataFrame:
     """doc_ids containing ANY of ``terms`` (with multiplicity across
-    terms), decoded ON EXECUTORS from the terms' postings blocks (term
-    predicate pushes to row groups; only doc_bytes is read — tf/dl/pos
-    columns pruned). The single output column is ``doc_id long``: a
-    driver that collects this holds 8 bytes per posting, never packed
-    payload bytes."""
-    blocks = _postings_df(spark, index_dir, list(dict.fromkeys(terms))).select(
-        "doc_bytes"
-    )
-
-    def decode_ids(batches):
-        from ..codecs.delta import delta_decode
-
-        for pdf in batches:
-            outs = [delta_decode(bytes(db)) for db in pdf["doc_bytes"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(
-                        np.concatenate(outs) if outs else [], dtype="int64"
-                    )
-                }
-            )
-
-    return blocks.mapInPandas(decode_ids, "doc_id long")
+    terms), decoded ON EXECUTORS from the terms' postings blocks (only
+    term and doc_bytes are read — tf/dl/pos columns pruned). The single
+    output column is ``doc_id long``: a driver that collects this holds
+    8 bytes per posting, never packed payload bytes."""
+    return term_doc_ids_with_term_df(spark, index_dir, terms).select("doc_id")
 
 
 def excluded_docs_df(
@@ -188,34 +204,21 @@ def term_doc_ids_with_term_df(
     spark: SparkSession, index_dir: str, terms: list[str]
 ) -> DataFrame:
     """(doc_id, term) pairs for every posting of ``terms`` — already
-    distinct (a term's blocks are doc-disjoint). Like term_doc_ids_df,
-    only doc_bytes is read: tf/dl/pos columns are pruned at the scan,
-    so filter-context queries never touch scoring payload."""
-    blocks = _postings_df(spark, index_dir, list(dict.fromkeys(terms))).select(
-        "term", "doc_bytes"
+    distinct (a term's blocks are doc-disjoint). Only doc_bytes is
+    decoded: tf/dl/pos columns are pruned at the scan, so
+    filter-context queries never touch scoring payload."""
+
+    def kernel(rb):
+        d = decode_postings(rb)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(d["doc_id"]), rb.column("term").take(pa.array(d["row"]))],
+            names=["doc_id", "term"],
+        )
+
+    return _map_blocks(
+        spark, index_dir, terms, ["term", "doc_bytes"], kernel,
+        "doc_id long, term string",
     )
-
-    def decode(batches):
-        from ..codecs.delta import delta_decode
-
-        for pdf in batches:
-            ids, term_l, sizes = [], [], []
-            for term, db in zip(pdf["term"], pdf["doc_bytes"]):
-                d = delta_decode(bytes(db))
-                ids.append(d)
-                term_l.append(term)
-                sizes.append(d.size)
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(np.concatenate(ids), dtype="int64"),
-                        "term": pd.Series(
-                            np.repeat(np.asarray(term_l, dtype=object), sizes)
-                        ),
-                    }
-                )
-
-    return blocks.mapInPandas(decode, "doc_id long, term string")
 
 
 def matching_docs_indexed(
@@ -310,10 +313,6 @@ def bm25_topk_indexed(
         return _empty(spark)
     terms, must_set, dfs, idfs, avgdl = q.terms, q.require, q.dfs, q.idfs, q.avgdl
 
-    blocks = _postings_df(spark, index_dir, terms).select(
-        "term", "n", "first_doc", "last_doc", "doc_bytes", "tf_bytes", "dl_bytes"
-    )
-
     # conjunctive block-range pruning (the leapfrog/skip-list move at
     # block granularity): decode the rarest term's docIDs (bounded by
     # and_prune_max_df), broadcast them, and kill every other term's
@@ -327,10 +326,10 @@ def bm25_topk_indexed(
         # the RAREST must term's doc list
         rare = min(must_set, key=lambda t: dfs[t])
         if dfs[rare] <= and_prune_max_df:
-            # decode the rare term's doc list ON EXECUTORS (mapInPandas)
-            # and pull back only the int64 ids (~8 bytes/posting,
-            # bounded by and_prune_max_df): packed payload bytes never
-            # transit the driver, matching the 1000-executor shape
+            # decode the rare term's doc list ON EXECUTORS and pull back
+            # only the int64 ids (~8 bytes/posting, bounded by
+            # and_prune_max_df): packed payload bytes never transit the
+            # driver, matching the 1000-executor shape
             ids = (
                 term_doc_ids_df(spark, index_dir, [rare])
                 .toPandas()["doc_id"]
@@ -340,54 +339,44 @@ def bm25_topk_indexed(
             bc_docs = spark.sparkContext.broadcast(cand_docs)
 
     prune = cand_docs is not None
+    cols = ["term", "doc_bytes", "tf_bytes", "dl_bytes"]
+    cols += ["first_doc", "last_doc"] if prune else []
 
-    def decode_score(batches):
-        from ..codecs import pfor
-        from ..codecs.delta import delta_decode
+    def decode_score(rb):
+        if prune:
+            cands = bc_docs.value
+            # coarse: decode only the blocks whose [first_doc, last_doc]
+            # holds a candidate
+            first = rb.column("first_doc").to_numpy(zero_copy_only=False)
+            last = rb.column("last_doc").to_numpy(zero_copy_only=False)
+            at = np.searchsorted(cands, first, side="left")
+            hit = at < cands.size
+            hit[hit] = cands[at[hit]] <= last[hit]
+            rb = rb.filter(pa.array(hit))
+        d = decode_postings(rb)
+        if prune:
+            keep = isin_sorted(d["doc_id"], cands)
+            d = {k: v[keep] for k, v in d.items()}
+        term_idf = np.array([idfs[t] for t in rb.column("term").to_pylist()])
+        sc = bm25_scores(
+            term_idf[d["row"]],
+            d["tf"].astype(np.float64),
+            d["dl"].astype(np.float64),
+            avgdl,
+        )
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(d["doc_id"]),
+                rb.column("term").take(pa.array(d["row"])),
+                pa.array(sc),
+            ],
+            names=["doc_id", "term", "sc"],
+        )
 
-        cands = bc_docs.value if prune else None
-        for pdf in batches:
-            # accumulate numpy arrays and build ONE frame per Arrow
-            # batch: a pandas DataFrame per 128-posting block costs 3x
-            # the whole decode (measured on the 105k-block bench index:
-            # 36.7 s per-block frames vs 11.7 s this shape)
-            doc_l, sc_l, term_l, size_l = [], [], [], []
-            for term, n, fd, ld, db, tb, lb in zip(
-                pdf["term"], pdf["n"], pdf["first_doc"], pdf["last_doc"],
-                pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"],
-            ):
-                if prune:
-                    # coarse: any candidate inside the block's doc range?
-                    lo = np.searchsorted(cands, fd, side="left")
-                    if lo >= cands.size or cands[lo] > ld:
-                        continue
-                docs = delta_decode(bytes(db))
-                tf = pfor.decode(bytes(tb), int(n)).astype(np.float64)
-                dl = pfor.decode(bytes(lb), int(n)).astype(np.float64)
-                if prune:
-                    keep = np.isin(docs, cands, assume_unique=False)
-                    if not keep.any():
-                        continue
-                    docs, tf, dl = docs[keep], tf[keep], dl[keep]
-                sc = idfs[term] * tf * (K1 + 1.0) / (
-                    tf + K1 * (1.0 - B + B * dl / avgdl)
-                )
-                doc_l.append(docs)
-                sc_l.append(sc)
-                term_l.append(term)
-                size_l.append(docs.size)
-            if doc_l:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(doc_l),
-                        "term": pd.Series(
-                            np.repeat(np.asarray(term_l, dtype=object), size_l)
-                        ),
-                        "sc": np.concatenate(sc_l),
-                    }
-                )
-
-    scored = blocks.mapInPandas(decode_score, "doc_id long, term string, sc double")
+    scored = _map_blocks(
+        spark, index_dir, terms, cols, decode_score,
+        "doc_id long, term string, sc double",
+    )
     from .bm25 import _query_order_sum
 
     # deterministic per-doc sum in query-term order (see bm25.py): a
@@ -437,6 +426,34 @@ def bm25_topk_indexed(
     return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def _occurrences_df(
+    spark: SparkSession, index_dir: str, terms: list[str], with_offsets: bool
+) -> DataFrame:
+    """(doc_id, term, p[, start]): every occurrence of ``terms`` with
+    its token position (and char start offset), one row per occurrence
+    from the packed .pos (and .pay) streams."""
+    cols = ["term", "doc_bytes", "tf_bytes", "pos_bytes"]
+    cols += ["off_bytes"] if with_offsets else []
+
+    def kernel(rb):
+        d = decode_postings(rb)
+        occ_row = np.repeat(d["row"], d["tf"])
+        arrays = [
+            pa.array(np.repeat(d["doc_id"], d["tf"])),
+            rb.column("term").take(pa.array(occ_row)),
+            pa.array(d["positions"]),
+        ]
+        names = ["doc_id", "term", "p"]
+        if with_offsets:
+            arrays.append(pa.array(d["starts"]))
+            names.append("start")
+        return pa.RecordBatch.from_arrays(arrays, names=names)
+
+    schema = "doc_id long, term string, p long"
+    schema += ", start long" if with_offsets else ""
+    return _map_blocks(spark, index_dir, terms, cols, kernel, schema)
+
+
 def flat_positions_df(
     spark: SparkSession, index_dir: str, terms: list[str]
 ) -> DataFrame:
@@ -444,51 +461,8 @@ def flat_positions_df(
     the packed positions stream (.pos consumer,
     /root/reference/codec/lucene_84_postings_reader.ml:4-7; requires a
     with_positions build). Term predicate pushes to row groups; one
-    fully vectorized numpy decode per block (per-doc position
-    reconstruction is a cumsum minus a repeated per-doc base — no
-    Python lists, no per-doc loops)."""
-    blocks = _postings_df(spark, index_dir, list(dict.fromkeys(terms))).select(
-        "term", "n", "doc_bytes", "tf_bytes", "pos_bytes"
-    )
-
-    def decode_flat(batches):
-        from ..codecs import pfor
-        from ..codecs.delta import delta_decode, stream_decode
-
-        for pdf in batches:
-            doc_out, pos_out, term_out = [], [], []
-            for term, n, db, tb, pb in zip(
-                pdf["term"], pdf["n"], pdf["doc_bytes"], pdf["tf_bytes"],
-                pdf["pos_bytes"],
-            ):
-                if pb is None:
-                    raise ValueError("index was built without positions")
-                docs = delta_decode(bytes(db))
-                tf = pfor.decode(bytes(tb), int(n)).astype(np.int64)
-                deltas = stream_decode(bytes(pb)).astype(np.int64)
-                # per-doc cumsum over the flat delta stream: the first
-                # delta of each doc is its absolute first position, so
-                # positions = running_sum - (running_sum_before_doc)
-                c = np.cumsum(deltas)
-                offsets = np.concatenate([[0], np.cumsum(tf)])
-                starts = offsets[:-1]
-                base = c[starts] - deltas[starts]
-                positions = c - np.repeat(base, tf)
-                doc_out.append(np.repeat(docs, tf))
-                pos_out.append(positions)
-                term_out.append(np.full(positions.size, term, dtype=object))
-            if doc_out:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(np.concatenate(doc_out), dtype="int64"),
-                        "term": pd.Series(
-                            np.concatenate(term_out), dtype=object
-                        ),
-                        "p": pd.Series(np.concatenate(pos_out), dtype="int64"),
-                    }
-                )
-
-    return blocks.mapInPandas(decode_flat, "doc_id long, term string, p long")
+    vectorized numpy decode per Arrow batch of blocks."""
+    return _occurrences_df(spark, index_dir, terms, with_offsets=False)
 
 
 def phrase_counts_indexed(
@@ -660,39 +634,11 @@ def term_offsets(
     consumer (/root/reference/codec/lucene_84_postings_reader.ml:16-49;
     pay_start_fp in terms_enumerator.ml:21-44), the primitive behind
     highlighting. Requires a with_offsets build. Fully vectorized: one
-    flat numpy decode per block, term predicate pushed to row groups."""
-    blocks = _postings_df(spark, index_dir, [term]).select(
-        "n", "doc_bytes", "tf_bytes", "pos_bytes", "off_bytes"
+    flat numpy decode per Arrow batch of blocks, term predicate pushed
+    to row groups."""
+    return _occurrences_df(spark, index_dir, [term], with_offsets=True).select(
+        "doc_id", F.col("p").alias("pos"), "start"
     )
-
-    def decode_occ(batches):
-        from ..codecs import pfor
-        from ..codecs.blocks import decode_flat_stream
-        from ..codecs.delta import delta_decode
-
-        for pdf in batches:
-            doc_out, pos_out, off_out = [], [], []
-            for n, db, tb, pb, ob in zip(
-                pdf["n"], pdf["doc_bytes"], pdf["tf_bytes"], pdf["pos_bytes"],
-                pdf["off_bytes"],
-            ):
-                if ob is None:
-                    raise ValueError("index was built without offsets")
-                docs = delta_decode(bytes(db))
-                tf = pfor.decode(bytes(tb), int(n)).astype(np.int64)
-                doc_out.append(np.repeat(docs, tf))
-                pos_out.append(decode_flat_stream(bytes(pb), tf))
-                off_out.append(decode_flat_stream(bytes(ob), tf))
-            if doc_out:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(np.concatenate(doc_out), dtype="int64"),
-                        "pos": pd.Series(np.concatenate(pos_out), dtype="int64"),
-                        "start": pd.Series(np.concatenate(off_out), dtype="int64"),
-                    }
-                )
-
-    return blocks.mapInPandas(decode_occ, "doc_id long, pos long, start long")
 
 
 def highlight_topk(
@@ -712,17 +658,11 @@ def highlight_topk(
     occurrence side is term-pushdown-pruned blocks, and the broadcast
     side is k rows."""
     top = bm25_topk_auto(spark, index_dir, terms, "or", k, round_to=round_to)
-    occ_parts = [
-        term_offsets(spark, index_dir, t).withColumn("term", F.lit(t))
-        for t in dict.fromkeys(terms)
-    ]
-    occ = occ_parts[0]
-    for p in occ_parts[1:]:
-        occ = occ.unionByName(p)
+    occ = _occurrences_df(spark, index_dir, terms, with_offsets=True)
     return (
         F.broadcast(top)
         .join(occ, "doc_id")
-        .select("doc_id", "score", "term", "pos", "start")
+        .select("doc_id", "score", "term", F.col("p").alias("pos"), "start")
     )
 
 

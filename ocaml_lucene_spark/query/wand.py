@@ -30,6 +30,15 @@ from ..oracle import B, K1
 INF_DOC = 1 << 62
 
 
+def bm25_scores(idf, tf, dl, avgdl: float):
+    """Per-posting BM25 scores (numpy arrays or scalars), associated
+    left to right as idf * tf * (K1+1) / den. Every decoded posting
+    score and every frontier bound is this one expression: the frontier
+    bound is often EXACTLY a real posting's score, and a different
+    float association could land one ulp off it."""
+    return idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+
+
 def tfn_ub(max_tf: float, min_dl: float, avgdl: float) -> float:
     return max_tf * (K1 + 1.0) / (max_tf + K1 * (1.0 - B + B * min_dl / avgdl))
 
@@ -41,16 +50,12 @@ def frontier_ub(tfs, dls, avgdl: float, idf: float = 1.0) -> float:
     min dl come from different postings (the common case for hot terms,
     where the naive pairing over-bounds and defeats pruning).
 
-    The expression below is ASSOCIATED identically to the decoded
-    per-posting scores in PostingList._decode (idf * tf * (K1+1) / den,
-    left-to-right) — because the frontier bound is frequently EXACTLY
-    equal to a real posting's score, a different float association
-    could land 1 ulp *under* it and prune a boundary-tied doc."""
+    Computed by bm25_scores, as the decoded per-posting scores are: a
+    different float association could land 1 ulp *under* a real
+    posting's score and prune a boundary-tied doc."""
     tf = np.asarray(tfs, dtype=np.float64)
     dl = np.asarray(dls, dtype=np.float64)
-    return float(
-        (idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))).max()
-    )
+    return float(bm25_scores(idf, tf, dl, avgdl).max())
 
 
 @dataclass(eq=False)  # identity equality: list.remove on iterator state
@@ -118,13 +123,7 @@ class PostingList:
         docs = delta_decode(db)
         tf = pfor.decode(tb, docs.size).astype(np.float64)
         dl = pfor.decode(lb, docs.size).astype(np.float64)
-        scores = (
-            self.idf
-            * tf
-            * (K1 + 1.0)
-            / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
-        )
-        return docs, scores
+        return docs, bm25_scores(self.idf, tf, dl, self.avgdl)
 
     def _decode(self) -> None:
         hit = self.cache.get(self.bi) if self.cache is not None else None

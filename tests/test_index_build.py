@@ -277,9 +277,20 @@ def test_and_prune_decode_is_driver_free(spark, built):
     got = sorted(r.doc_id for r in df.collect())
     assert got == sorted(oracle.postings[some_term])
     # the payload column feeds the executor-side decode only: it is
-    # consumed under the mapInPandas boundary, not in the output plan
+    # consumed under the mapInArrow boundary, not in the output plan
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "doc_bytes" not in plan.split("MapInPandas")[0]
+    assert "doc_bytes" not in plan.split("MapInArrow")[0]
+
+
+def test_flat_positions_needs_a_positions_build(spark, built):
+    """An index built without positions has no .pos stream to decode:
+    the occurrence scan raises instead of returning nothing."""
+    from ocaml_lucene_spark.query.exec import flat_positions_df
+
+    index_dir, _, oracle = built
+    term = sorted(oracle.postings)[0]
+    with pytest.raises(Exception, match="ValueError: index was built without positions"):
+        flat_positions_df(spark, index_dir, [term]).collect()
 
 
 def test_bm25_auto_routing(spark, built):

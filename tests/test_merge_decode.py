@@ -1,7 +1,8 @@
-"""merge.decode_blocks, the columnar merge decode kernel, against the
-per-block decoders (decode_doc_ids, decode_tfs, decode_positions) on
-blocks written by encode_posting_blocks: random terms with positions
-and offsets, salted and unsalted blocks, with and without deleted docs
+"""The shared block decoder (codecs.blocks.decode_postings) and merge's
+kernel on top of it (merge.decode_blocks), against the per-block
+decoders (decode_doc_ids, decode_tfs, decode_positions) on blocks
+written by encode_posting_blocks: random terms with positions and
+offsets, salted and unsalted blocks, with and without deleted docs
 (including a block whose every doc is deleted)."""
 
 import numpy as np
@@ -11,6 +12,7 @@ import pytest
 from ocaml_lucene_spark.codecs.blocks import (
     decode_doc_ids,
     decode_positions,
+    decode_postings,
     decode_tfs,
     encode_posting_blocks,
 )
@@ -70,21 +72,82 @@ def _per_block(rows, deleted, with_positions, with_offsets):
     return out
 
 
+def _deleted(rows, deletes):
+    """Sorted deleted ids: none, 150 random docs, or those plus every
+    doc of a salted block and of an unsalted one."""
+    if deletes == "none":
+        return None
+    rng = np.random.default_rng(11)
+    all_docs = np.concatenate([decode_doc_ids(r["doc_bytes"]) for r in rows])
+    deleted = rng.choice(np.unique(all_docs), 150, replace=False)
+    if deletes == "whole_block":
+        whole = [r for r in rows if r["block_no"] >= 100_000][:1]
+        whole += [r for r in rows if r["block_no"] < 100_000][:1]
+        deleted = np.concatenate([deleted] + [decode_doc_ids(r["doc_bytes"]) for r in whole])
+    return np.unique(deleted).astype(np.int64)
+
+
+# the column subsets the postings readers select
+READER_COLUMNS = {
+    "doc": ["doc_bytes"],
+    "term+doc": ["term", "doc_bytes"],
+    "doc/tf/dl": ["term", "doc_bytes", "tf_bytes", "dl_bytes"],
+    "+pos": ["term", "doc_bytes", "tf_bytes", "pos_bytes"],
+    "+pos+off": ["term", "doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes", "off_bytes"],
+}
+
+
+@pytest.mark.parametrize("subset", list(READER_COLUMNS))
+@pytest.mark.parametrize("deletes", ["none", "some", "whole_block"])
+def test_decode_postings_matches_per_block_decoders(subset, deletes):
+    rows = _blocks(seed=5)
+    deleted = _deleted(rows, deletes)
+    cols = READER_COLUMNS[subset]
+    batch = pa.RecordBatch.from_pylist([{c: r[c] for c in cols} for r in rows])
+
+    got = decode_postings(batch, deleted)
+
+    want = {"row": [], "doc_id": [], "tf": [], "dl": [], "positions": [], "starts": []}
+    for i, r in enumerate(rows):
+        tf = decode_tfs(r["tf_bytes"], r["n"])
+        pos = decode_positions(r["pos_bytes"], tf)
+        off = decode_positions(r["off_bytes"], tf)
+        for j, d in enumerate(decode_doc_ids(r["doc_bytes"]).tolist()):
+            if deleted is not None and d in set(deleted.tolist()):
+                continue
+            want["row"].append(i)
+            want["doc_id"].append(d)
+            want["tf"].append(int(tf[j]))
+            want["dl"].append(int(decode_tfs(r["dl_bytes"], r["n"])[j]))
+            want["positions"] += pos[j].tolist()
+            want["starts"] += off[j].tolist()
+    carried = {"tf_bytes": "tf", "dl_bytes": "dl", "pos_bytes": "positions", "off_bytes": "starts"}
+    keys = ["row", "doc_id"] + [v for k, v in carried.items() if k in cols]
+    assert sorted(got) == sorted(keys)
+    for k in keys:
+        assert got[k].dtype == np.int64, k
+        assert got[k].tolist() == want[k], k
+
+
+@pytest.mark.parametrize(
+    "null_col,message",
+    [("pos_bytes", "index was built without positions"), ("off_bytes", "index was built without offsets")],
+)
+def test_decode_postings_null_stream_raises(null_col, message):
+    cols = ["doc_bytes", "tf_bytes", "pos_bytes", "off_bytes"]
+    batch = pa.RecordBatch.from_pylist(
+        [{c: (None if c == null_col else r[c]) for c in cols} for r in _blocks(seed=2)[:3]],
+        schema=pa.schema([(c, pa.binary()) for c in cols]),
+    )
+    with pytest.raises(ValueError, match=message):
+        decode_postings(batch)
+
+
 @pytest.mark.parametrize("with_positions,with_offsets", [(False, False), (True, False), (True, True)])
 @pytest.mark.parametrize("deletes", ["none", "some", "whole_block"])
 def test_decode_blocks_matches_per_block_decoders(with_positions, with_offsets, deletes):
     rows = _blocks(seed=7)
-    deleted = None
-    if deletes != "none":
-        rng = np.random.default_rng(11)
-        all_docs = np.concatenate([decode_doc_ids(r["doc_bytes"]) for r in rows])
-        deleted = rng.choice(np.unique(all_docs), 150, replace=False)
-        if deletes == "whole_block":
-            # every doc of a salted block and of an unsalted one
-            whole = [r for r in rows if r["block_no"] >= 100_000][:1]
-            whole += [r for r in rows if r["block_no"] < 100_000][:1]
-            deleted = np.concatenate([deleted] + [decode_doc_ids(r["doc_bytes"]) for r in whole])
-        deleted = np.unique(deleted).astype(np.int64)
+    deleted = _deleted(rows, deletes)
     cols = ["term", "block_no", "n", "doc_bytes", "tf_bytes", "dl_bytes"]
     cols += ["pos_bytes"] if with_positions else []
     cols += ["off_bytes"] if with_offsets else []

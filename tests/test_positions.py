@@ -227,6 +227,17 @@ def test_highlight_topk_matches_offsets_oracle(spark, tmp_path_factory):
     assert got == expected, (sorted(got)[:5], sorted(expected)[:5])
 
 
+def test_term_offsets_needs_an_offsets_build(spark, pos_index):
+    """A positions-only index has no .pay stream: term_offsets raises
+    instead of returning nothing."""
+    from ocaml_lucene_spark.query.exec import term_offsets
+
+    index_dir, oracle = pos_index
+    term = sorted(oracle.positions)[0]
+    with pytest.raises(Exception, match="ValueError: index was built without offsets"):
+        term_offsets(spark, index_dir, term).collect()
+
+
 def test_positional_index_still_scores(spark, pos_index):
     index_dir, oracle = pos_index
     got = [(r.doc_id, r.score) for r in bm25_topk_indexed(spark, index_dir, ["the"], "or", 5).collect()]
