@@ -1,6 +1,6 @@
 """Index build DAG — the north-rule pipeline.
 
-    read webtext -> assign deterministic global docIDs ->
+    read webtext -> assign deterministic global docIDs (JVM) ->
     tokenize (JVM codegen; or Arrow UDF from raw html) ->
     explode -> per-(doc,term) tf [+ positions] (map-side partial agg) ->
     df-driven hot-term salting -> segments.write_segment: hash
@@ -13,8 +13,9 @@
 
 Scale design notes (100 TB, 1000 executors):
 - docID assignment is a hash shuffle on url + a driver exchange of
-  per-partition counts (tiny), not a global row_number sort: ids are a
-  pure function of the url set (BASELINE.json north_rule determinism).
+  per-partition counts (tiny), numbered in the JVM from the counts'
+  offsets, not a global row_number sort: ids are a pure function of the
+  url set (BASELINE.json north_rule determinism).
 - tf aggregation happens map-side: all tokens of a doc live in one scan
   partition, so the partial agg collapses (doc,term) before shuffling.
 - salting: terms whose df exceeds ``salt_df_threshold`` are split into
@@ -26,7 +27,12 @@ Scale design notes (100 TB, 1000 executors):
   globally doc-disjoint, which is what lets query-side block-max WAND
   treat a term as ONE doc-sorted posting list and skip whole blocks;
   hash-interleaved salts would make every block span the whole doc
-  space and defeat skip pruning.
+  space and defeat skip pruning. A segment of at most
+  ``salt_df_threshold`` docs cannot hold a hot term, so it is written
+  unsalted without sampling (every incremental add of a small batch).
+- one Python stage per write: the pack kernel. Doc-id numbering,
+  salting and tokenizing are JVM expressions (tokenizing runs in Python
+  only for offsets or raw html).
 - the pack kernel writes its shard directly from the executor and
   returns a checkpoint row: restartable without recompute, per-partition
   lineage + docs/sec / postings/sec / bytes metrics (north rule).
@@ -69,11 +75,14 @@ def assign_doc_ids(docs: DataFrame, id_partitions: int | None = None) -> DataFra
     Hash-partition by url (murmur3 — identical across jobs, unlike
     repartitionByRange whose sampled boundaries vary run to run and
     would break the counts/assignment consistency), sort within
-    partitions, count per partition (tiny driver exchange), then
-    enumerate per partition with mapInArrow (no window shuffle; record
-    batches pass through as zero-copy Arrow buffers with one appended
-    int64 column — payload columns like html never materialize in
-    Python).
+    partitions, count per partition (tiny driver exchange), then number
+    each partition's rows in the JVM: doc_id = offset[pid] + the row's
+    rank in its sorted partition, where the offsets are one array
+    literal of the counts' running sums and the rank is
+    ``monotonically_increasing_id() - (pid << 33)`` (that id is the
+    partition id in the upper bits over the row's position). No Python
+    worker sees a row, and Catalyst prunes columns through the
+    numbering like through any projection.
 
     The partition count is INPUT-derived (url count / URLS_PER_ID_PARTITION
     = 6,250, capped at 32,768), so
@@ -84,13 +93,7 @@ def assign_doc_ids(docs: DataFrame, id_partitions: int | None = None) -> DataFra
     local[4] vs local[8]; the spark-submit e2e test caught it.) The
     sizing count is one url-column scan before the timed pipeline.
     Passing ``id_partitions`` explicitly moves this responsibility to
-    the caller: ids are then a function of (url set, id_partitions).
-
-    NOTE: the enumeration UDF is a column-pruning barrier — Catalyst
-    cannot prune columns through it — so SELECT the columns you need
-    BEFORE calling (e.g. ``assign_doc_ids(df.select("url", "text"))``),
-    or every downstream job drags the full row payload through the
-    worker."""
+    the caller: ids are then a function of (url set, id_partitions)."""
     n = id_partitions
     if n is None:
         n_urls = docs.select("url").count()
@@ -104,41 +107,27 @@ def assign_doc_ids(docs: DataFrame, id_partitions: int | None = None) -> DataFra
         r._pid: r.c
         for r in parted.groupBy("_pid").agg(F.count("*").alias("c")).collect()
     }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    out_schema = parted.drop("_pid").schema.add("doc_id", "long")
-
-    def enumerate_partition(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        rn = 0
-        off = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if off is None:
-                off = offsets[int(rb.column(rb.schema.get_field_index("_pid"))[0].as_py())]
-            ids = pa.array(
-                np.arange(off + rn, off + rn + rb.num_rows, dtype=np.int64)
-            )
-            rn += rb.num_rows
-            keep = [f for f in rb.schema.names if f != "_pid"]
-            arrays = [rb.column(rb.schema.get_field_index(f)) for f in keep]
-            yield pa.RecordBatch.from_arrays(arrays + [ids], names=keep + ["doc_id"])
-
-    out = parted.mapInArrow(enumerate_partition, out_schema)
+    offsets = [0] * n
+    for pid in range(1, n):
+        offsets[pid] = offsets[pid - 1] + counts.get(pid - 1, 0)
+    # F.get, not []: under ANSI an indexed literal array is non-null,
+    # and doc_id stays nullable — the norms files record the schema's
+    # nullability, so it is part of their bytes
+    pid = F.col("_pid")
+    out = parted.withColumn(
+        "doc_id",
+        F.get(F.lit(offsets), pid).cast("long")
+        + F.monotonically_increasing_id()
+        - F.shiftleft(pid.cast("long"), 33),
+    ).drop("_pid")
     # The id-partition count is INPUT-derived (it must be, for id
     # determinism), so a small corpus can land far fewer partitions
     # than the cluster has cores — and every CPU-heavy map downstream
     # (tokenize, explode) would inherit that width: measured 16s -> 24s+
     # at local[8] on the 100k-doc bench when n collapsed to 2. The ids
-    # are already materialized by the enumeration map, so a round-robin
-    # repartition here restores compute parallelism without touching
-    # the id map. At cluster scale n >= cores and this is a no-op.
+    # are computed before this exchange, so a round-robin repartition
+    # here restores compute parallelism without touching the id map.
+    # At cluster scale n >= cores and this is a no-op.
     target = docs.sparkSession.sparkContext.defaultParallelism
     if n < target:
         out = out.repartition(target)
@@ -166,10 +155,18 @@ def _write_norms(norms: DataFrame, path: str):
     return obs.get
 
 
-def _with_salt(tf: DataFrame, hot: DataFrame, stats, n_salts: int) -> DataFrame:
+def _with_salt(
+    tf: DataFrame, hot: DataFrame, stats, n_salts: int, salt_df_threshold: int
+) -> DataFrame:
     """Attach the hot-term salt: rows of a term in ``hot`` get 1..n_salts,
     the CONTIGUOUS doc-id range bucket of the norms' [lo, hi] span
-    (module docstring); every other row gets 0."""
+    (module docstring); every other row gets 0.
+
+    A segment of at most ``salt_df_threshold`` docs has no term whose df
+    exceeds the threshold, so every salt is 0 and ``hot`` (a lazy
+    frame) is never evaluated: small writes run no hot-term job."""
+    if int(stats["n_docs"]) <= salt_df_threshold:
+        return tf.withColumn("salt", F.lit(0))
     lo, hi = stats["lo"], stats["hi"]
     span = int(hi) - int(lo) + 1 if lo is not None else 1
     return tf.join(F.broadcast(hot), "term", "left").withColumn(
@@ -327,7 +324,7 @@ def build_index(
         .filter(F.col("df_s") > salt_df_threshold * sample_frac)
         .select("term", F.lit(1).alias("_hot"))
     )
-    tf = _with_salt(tf, hot, corpus, n_salts)
+    tf = _with_salt(tf, hot, corpus, n_salts, salt_df_threshold)
     mark("term_dictionary")
 
     manifest_row = seg.write_segment(
@@ -401,7 +398,7 @@ def build_index_from_postings(
     )
     tf = _with_salt(
         postings.join(postings.sparkSession.read.parquet(paths["norms"]), "doc_id"),
-        hot, corpus, n_salts,
+        hot, corpus, n_salts, salt_df_threshold,
     )
     manifest_row = seg.write_segment(
         tf, index_dir, segment, generation,
@@ -434,8 +431,7 @@ def add_documents(
 
     bounds = seg.doc_bounds(index_dir)
     base = bounds[1] + 1 if bounds is not None else 0
-    # prune to the needed columns BEFORE the enumeration UDF (column-
-    # pruning barrier, see assign_doc_ids)
+    # the columns the build reads, under the names it reads them by
     keep = ["url", text_col] + ([build_kw["html_col"]] if build_kw.get("html_col") else [])
     with_ids = assign_doc_ids(
         docs.withColumnRenamed(url_col, "url").select(*dict.fromkeys(keep))

@@ -6,19 +6,24 @@ merge itself, mirroring Lucene's TieredMergePolicy: segments are
 grouped into size tiers and the smallest ``merge_factor`` segments of
 an over-full tier are merged into one.
 
-Merge = decode the candidate segments' blocks (``decode_blocks`` under
-mapInArrow: codecs.blocks.decode_postings, the block decoder every
-postings reader shares, turns one batch of blocks into concatenated
-numpy columns less the purged docs; salted rows then re-bucket over the
-merged doc span) -> the union of the source norms less the purged docs
-(an anti-join with deletes.deleted_frame, built in the JVM), written by
-build's norms writer, whose Observation gives n_docs/sum_dl ->
-segments.write_segment, the same writer build and import end in (one
-hash shuffle on (term, salt), JVM sort, mapInArrow pack that also
-yields the terms stats) -> new segment + manifest rows marking sources
-'merged'. Because docIDs are global and BM25 stats aggregate across
-live segments, queries are invariant under merge (tested) — merge is
-purely a layout/locality operation, exactly like Lucene's.
+Merge = read the candidate segments' packed blocks with their known
+columns (no schema-inference job) and give each block row its target
+salt in the JVM: 0 for an unsalted block, one row per bucket of the
+merged doc span its [first_doc, last_doc] touches for a salted one ->
+the union of the source norms less the purged docs (an anti-join with
+deletes.deleted_frame, built in the JVM), written by build's norms
+writer, whose Observation gives n_docs/sum_dl ->
+segments.write_segment, the same writer build and import end in: one
+hash shuffle of the BLOCKS on (term, salt), a JVM sort by (term, salt,
+first_doc), and the pack task decodes each batch (``decode_blocks``:
+codecs.blocks.decode_postings, the block decoder every postings reader
+shares, less the purged docs, keeping each row's own salt) before
+packing and yielding the terms stats -> new segment + manifest rows
+marking sources 'merged'. One Python stage in all; the pack sees the
+same rows a postings shuffle would have given it. Because docIDs are
+global and BM25 stats aggregate across live segments, queries are
+invariant under merge (tested) — merge is purely a layout/locality
+operation, exactly like Lucene's.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ import time
 
 import numpy as np
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from . import segments as seg
 from .build import _write_norms
@@ -69,15 +75,18 @@ def decode_blocks(
 ):
     """Merge's decode kernel: one Arrow batch of packed block rows
     (term, block_no, doc_bytes, tf_bytes, dl_bytes[, pos_bytes]
-    [, off_bytes]) -> one RecordBatch of postings rows (term, salt,
-    doc_id, tf, dl[, positions][, starts]); None when no row is left.
+    [, off_bytes][, salt]) -> one RecordBatch of postings rows (term,
+    salt, doc_id, tf, dl[, positions][, starts]); None when no row is
+    left.
 
     The streams decode through codecs.blocks.decode_postings, which
     drops the docs in the sorted ``deleted`` ids (None: purge nothing).
     Rows of a salted block (block_no >= 100_000) re-bucket over the
     merged doc span [lo, lo + span) into salts 1..n_salts, so the merged
     segment keeps doc-contiguous salt ranges; every other row stays
-    salt 0 (one run, fewer blocks)."""
+    salt 0 (one run, fewer blocks). A batch with a ``salt`` column (the
+    row's target salt, as merge_segments gives each block one row per
+    salt its doc range touches) keeps only the postings of that salt."""
     import pyarrow as pa
 
     from ..codecs.blocks import decode_postings, occurrence_lists
@@ -93,6 +102,14 @@ def decode_blocks(
     salt = np.where(
         salted, 1 + np.minimum(n_salts - 1, (docs - lo) * n_salts // span), 0
     )
+    if "salt" in batch.schema.names:
+        keep = salt == batch.column("salt").to_numpy(zero_copy_only=False)[row]
+        if not keep.all():
+            occ = np.repeat(keep, d["tf"])
+            d = {k: v[occ if k in ("positions", "starts") else keep] for k, v in d.items()}
+            docs, row, salt = d["doc_id"], d["row"], salt[keep]
+            if not docs.size:
+                return None
     cols = {
         "term": batch.column("term").take(pa.array(row)),
         "salt": pa.array(salt, pa.int32()),
@@ -140,35 +157,42 @@ def merge_segments(
     with_positions = all(bool(st.get("with_positions")) for st in src_stats)
     with_offsets = all(bool(st.get("with_offsets")) for st in src_stats)
 
-    posting_paths = [
-        seg.segment_paths(index_dir, s)["postings"] for s in segment_names
-    ]
-    blocks = spark.read.parquet(*posting_paths)
+    # the blocks' known columns: no footer-inference job
+    block_schema = (
+        "term string, block_no int, first_doc long, last_doc long, "
+        "doc_bytes binary, tf_bytes binary, dl_bytes binary"
+        + (", pos_bytes binary" if with_positions else "")
+        + (", off_bytes binary" if with_offsets else "")
+    )
+    blocks = spark.read.schema(block_schema).parquet(
+        *[seg.segment_paths(index_dir, s)["postings"] for s in segment_names]
+    )
 
     # merged doc-id span (the sources' norms footers): salted rows are
-    # re-bucketed over it below so the merged segment keeps the
-    # doc-contiguous salt property WAND pruning relies on
+    # re-bucketed over it so the merged segment keeps the doc-contiguous
+    # salt property WAND pruning relies on; each block row gets its
+    # target salt(s) here, and its postings are decoded in the pack task
     bounds = seg.doc_bounds(index_dir, segment_names)
     m_lo, m_span = (bounds[0], bounds[1] - bounds[0] + 1) if bounds else (0, 1)
 
-    cols = ["term", "block_no", "doc_bytes", "tf_bytes", "dl_bytes"]
-    cols += ["pos_bytes"] if with_positions else []
-    cols += ["off_bytes"] if with_offsets else []
-    pos_schema = (
-        "term string, salt int, doc_id long, tf long, dl long"
-        + (", positions array<long>" if with_positions else "")
-        + (", starts array<long>" if with_offsets else "")
-    )
+    def salt_of(doc: str):
+        return F.expr(
+            f"1 + least({n_salts - 1}, ({doc} - {m_lo}) * {n_salts} div {m_span})"
+        ).cast("int")
 
-    def unpack(batches):
-        for rb in batches:
-            out = decode_blocks(
-                rb, deleted, m_lo, m_span, n_salts, with_positions, with_offsets
+    blocks = blocks.withColumn(
+        "salt",
+        F.explode(
+            F.when(F.col("block_no") < 100_000, F.array(F.lit(0))).otherwise(
+                F.sequence(salt_of("first_doc"), salt_of("last_doc"))
             )
-            if out is not None:
-                yield out
+        ),
+    ).drop("last_doc")
 
-    postings = blocks.select(*cols).mapInArrow(unpack, pos_schema)
+    def decode(batch):
+        return decode_blocks(
+            batch, deleted, m_lo, m_span, n_salts, with_positions, with_offsets
+        )
 
     generation = seg.next_generation(index_dir)
     new_name = f"merged{generation:06d}"
@@ -177,7 +201,7 @@ def merge_segments(
     # norms = union of source norms, less the purged docs (Lucene merge:
     # the rewritten segment no longer contains them anywhere)
     norm_paths = [seg.segment_paths(index_dir, s)["norms"] for s in segment_names]
-    norms_src = spark.read.parquet(*norm_paths)
+    norms_src = spark.read.schema("doc_id long, dl long").parquet(*norm_paths)
     purged_ids: list[int] = []
     if deleted is not None:
         dd = del_mod.deleted_frame(spark, deleted)
@@ -193,11 +217,12 @@ def merge_segments(
     else:
         corpus = _write_norms(norms_src, paths["norms"])
         manifest_row = seg.write_segment(
-            postings, index_dir, new_name, generation,
+            blocks, index_dir, new_name, generation,
             n_docs=int(corpus["n_docs"]), sum_dl=int(corpus["sum_dl"] or 0),
             source="merge", started=t0,
             with_positions=with_positions, with_offsets=with_offsets,
             n_partitions=n_partitions, merged_from=segment_names,
+            decode=decode,
         )
     if purged_ids:
         # purged ids are physically gone: rewrite the deletes files

@@ -89,6 +89,7 @@ def _hash_string_array(h, arr) -> None:
 
 def pack_table(
     table,
+    pid: int,
     segment: str,
     postings_dir: str,
     checkpoint_dir: str,
@@ -96,8 +97,8 @@ def pack_table(
     with_offsets: bool = False,
 ):
     """Arrow-native pack kernel (runs under mapInArrow in
-    ``write_segment``): one shuffle partition of (term, salt, doc_id,
-    tf, dl[, positions][, starts], pid) rows -> packed block rows
+    ``write_segment``): shuffle partition ``pid``'s (term, salt, doc_id,
+    tf, dl[, positions][, starts]) rows -> packed block rows
     written as a term-sorted parquet shard; returns a PACK_SCHEMA table
     of the checkpoint/metrics row and the shard's (term, df, ttf) rows
     (None for an empty input).
@@ -132,7 +133,6 @@ def pack_table(
         c = table.column(name)
         return c.chunk(0) if isinstance(c, pa.ChunkedArray) else c
 
-    pid = int(col("pid")[0].as_py())
     doc_ids = col("doc_id").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     salts = col("salt").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
 
@@ -388,6 +388,7 @@ def write_segment(
     doc_id_base: int | None = None,
     merged_from: list[str] | None = None,
     mark=None,
+    decode=None,
 ) -> dict:
     """The one segment writer: build, import and merge all end here, so
     a segment's bytes never depend on what produced its postings
@@ -405,7 +406,16 @@ def write_segment(
     ``doc_id_base`` and resumed partition count. ``mark(label)`` is
     called after the pack and after the terms write (build profile).
     ``started`` is the caller's time.monotonic() start, for the row's
-    elapsed and rate fields."""
+    elapsed and rate fields.
+
+    ``decode`` (merge): ``postings`` are then packed block rows (term,
+    salt, first_doc, the byte streams) with one row per salt a block's
+    postings fall in, and ``decode(batch)`` turns one Arrow batch of
+    them into the postings RecordBatch above (None: no posting left).
+    The blocks, not their decoded postings, cross the shuffle: the
+    writer sorts them by (term, salt, first_doc) and decodes inside the
+    pack task, which then packs the same rows it would have been
+    shuffled."""
     import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
@@ -422,10 +432,13 @@ def write_segment(
     # row group per shard; hot terms spread across n_salts partitions.
     # Sort in the JVM (Tungsten sort on the shuffled rows) — a string
     # sort in the kernel costs more than the packing itself; the kernel
-    # verifies order and skips its own sort.
+    # verifies order and skips its own sort. Blocks sort by first_doc:
+    # decoded in that order, a (term, salt)'s postings come out in doc
+    # order unless two sources' blocks interleave (a merged segment
+    # whose doc range spans another source's); the kernel re-sorts then.
     shuffled = (
         postings.repartition(n_parts, "term", "salt")
-        .sortWithinPartitions("term", "salt", "doc_id")
+        .sortWithinPartitions("term", "salt", "doc_id" if decode is None else "first_doc")
         .withColumn("pid", F.spark_partition_id())
     )
 
@@ -438,8 +451,13 @@ def write_segment(
         chunks = list(batches)
         if not chunks:
             return
+        pid = int(chunks[0].column("pid")[0].as_py())
+        if decode is not None:
+            chunks = [b for b in map(decode, chunks) if b is not None]
+            if not chunks:
+                return
         packed = pack_table(
-            pa.Table.from_batches(chunks),
+            pa.Table.from_batches(chunks), pid,
             segment, paths["postings"], paths["checkpoints"], with_positions,
             with_offsets=with_offsets,
         )

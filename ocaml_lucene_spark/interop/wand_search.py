@@ -18,7 +18,7 @@ What is shared vs. new:
   engine parquet block;
 - per-block upper bounds come from the level-0 skip impacts: ub =
   max over the competitive (freq, norm) pairs of
-  idf·tfn(freq, dl=byte4_to_int(norm)) — exact, because BM25 is
+  bm25_scores(idf, freq, dl=byte4_to_int(norm)) — exact, because BM25 is
   monotone increasing in tf and decreasing in dl and the pareto set
   dominates every posting in the block;
 - per-doc lengths come from the Lucene80 norms pair
@@ -55,7 +55,6 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from ..oracle import B, K1
 from ..query.wand import PostingList, block_max_wand, bm25_scores
 from .norms import byte4_to_int
 from .open_index import LuceneIndex, SegmentReader
@@ -70,12 +69,6 @@ from .postings_stream import (
 _DL_LUT = np.array([byte4_to_int(b) for b in range(256)], dtype=np.float64)
 
 
-def _tfn(tf, dl, avgdl: float):
-    # the one canonical BM25 shape (oracle.py), associated exactly as
-    # PostingList._decode_payload computes per-posting scores
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-
-
 def _idf(df: int, n_docs: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
@@ -83,11 +76,13 @@ def _idf(df: int, n_docs: int) -> float:
 def _impact_ub(pairs, idf: float, avgdl: float) -> float:
     """Exact block bound from a competitive impact set: the pareto
     frontier dominates every (freq, norm) in the covered block, and
-    the score is monotone in both coordinates."""
-    return max(
-        float(idf * _tfn(float(f), float(_DL_LUT[n]), avgdl))
-        for f, n in pairs
-    )
+    the score is monotone in both coordinates. Computed by
+    bm25_scores, as the block's decoded posting scores are: with idf
+    multiplied outside the tf part, the bound could land one ulp under
+    a real posting's score and prune a tied doc."""
+    tf = np.array([f for f, _ in pairs], dtype=np.float64)
+    dl = _DL_LUT[np.array([n for _, n in pairs], dtype=np.int64)]
+    return float(bm25_scores(idf, tf, dl, avgdl).max())
 
 
 @dataclass(eq=False)  # iterator state: identity equality (wand.py)

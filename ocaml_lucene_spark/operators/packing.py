@@ -19,7 +19,8 @@ way a 1000-executor cluster has to:
    ~1e6 rows at the target corpus) broadcast back as range offsets;
 3. a within-range window cumsum (partitioned by range — parallel).
 
-Same two-pass shape as assign_doc_ids' count-then-enumerate."""
+Same two-pass shape as assign_doc_ids' count-then-number (per-partition
+counts, then their running sums as offsets)."""
 
 from __future__ import annotations
 

@@ -161,6 +161,60 @@ def test_docid_assignment_input_partitioning_invariant(spark, tiny_corpus):
     assert a == b
 
 
+def _enumerate_reference(docs):
+    """The mapInArrow enumeration kernel assign_doc_ids used before it
+    numbered ids in the JVM, kept as the reference: the same url hash
+    partitions, sorted by url, numbered from each partition's offset."""
+    from ocaml_lucene_spark.index.build import MAX_ID_PARTITIONS, URLS_PER_ID_PARTITION
+
+    n = max(2, min(MAX_ID_PARTITIONS, 1 + docs.count() // URLS_PER_ID_PARTITION))
+    parted = (
+        docs.repartition(n, "url")
+        .sortWithinPartitions("url")
+        .withColumn("_pid", F.spark_partition_id())
+    )
+    counts = dict(parted.groupBy("_pid").count().collect())
+    offsets, acc = {}, 0
+    for pid in sorted(counts):
+        offsets[pid], acc = acc, acc + counts[pid]
+
+    def enumerate_partition(batches):
+        import pyarrow as pa
+
+        rn = 0
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            off = offsets[rb.column(rb.schema.get_field_index("_pid"))[0].as_py()]
+            ids = pa.array(np.arange(off + rn, off + rn + rb.num_rows, dtype=np.int64))
+            rn += rb.num_rows
+            yield pa.RecordBatch.from_arrays([rb.column(0), ids], names=["url", "doc_id"])
+
+    return parted.select("url", "_pid").mapInArrow(
+        enumerate_partition, "url string, doc_id long"
+    ), n
+
+
+@pytest.mark.parametrize("n_docs", [300, 12_500])
+def test_docid_numbering_equals_enumeration_kernel(spark, tmp_path_factory, n_docs):
+    """assign_doc_ids numbers docs in the JVM; the ids equal the old
+    Python enumeration kernel's, with more than two id partitions at
+    12,500 docs, and doc_id stays nullable as the kernel declared it
+    (the norms files record the schema's nullability)."""
+    from ocaml_lucene_spark.sources.corpus import generate_corpus
+
+    src = spark.read.parquet(
+        generate_corpus(str(tmp_path_factory.mktemp(f"ids{n_docs}")), n_docs=n_docs, seed=12)
+    ).select("url", "text")
+    got = assign_doc_ids(src)
+    assert got.schema["doc_id"].nullable
+    want, n_parts = _enumerate_reference(src)
+    assert n_parts == (3 if n_docs > 12_000 else 2)
+    ids = dict(got.select("url", "doc_id").collect())
+    assert ids == dict(want.collect())
+    assert sorted(ids.values()) == list(range(n_docs))
+
+
 def test_wand_exec_rank_identity(spark, built):
     """Executor-side WAND (one task per query, payloads never on the
     driver) matches the oracle exactly, incl. rounded tie-break."""

@@ -160,6 +160,81 @@ def test_merge_drops_fully_deleted_segments(spark, tiny_corpus, tmp_path_factory
                 assert math.isclose(gs, es, rel_tol=1e-9)
 
 
+def _decoded_segment(index_dir, segment):
+    """({(term, doc): (tf, dl, positions, starts)}, block rows) of one
+    segment's postings, decoded block by block with the per-block
+    reference decoders."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from ocaml_lucene_spark.codecs.blocks import decode_doc_ids, decode_positions, decode_tfs
+    from ocaml_lucene_spark.index.segments import segment_paths
+
+    postings, blocks = {}, []
+    for f in glob.glob(os.path.join(segment_paths(index_dir, segment)["postings"], "*.parquet")):
+        for r in pq.read_table(f).to_pylist():
+            docs = decode_doc_ids(r["doc_bytes"]).tolist()
+            tf = decode_tfs(r["tf_bytes"], r["n"])
+            dl = decode_tfs(r["dl_bytes"], r["n"])
+            pos = decode_positions(r["pos_bytes"], tf)
+            off = decode_positions(r["off_bytes"], tf)
+            for j, d in enumerate(docs):
+                postings[(r["term"], d)] = (int(tf[j]), int(dl[j]), pos[j].tolist(), off[j].tolist())
+            blocks.append((r["term"], r["block_no"], docs))
+    return postings, blocks
+
+
+def test_merge_rebuckets_straddling_salted_blocks(spark, tiny_corpus, tmp_path_factory, check_terms):
+    """A merge of salted segments with positions, offsets and deletes
+    re-buckets salted blocks over the merged doc span: source blocks
+    that straddle the new salt boundaries (n_salts=4) split between
+    salts, and the merged segment decodes to the union of the sources'
+    postings less the purged docs, every salted block inside its salt's
+    doc range and each (term, salt) in doc order. (A term salted in one
+    source and not in another keeps its unsalted rows at salt 0.)"""
+    from ocaml_lucene_spark.index.deletes import delete_docs
+    from ocaml_lucene_spark.index.segments import doc_bounds
+
+    index_dir = str(tmp_path_factory.mktemp("index_straddle"))
+    docs = spark.read.parquet(tiny_corpus).select("url", "text")
+    for part in (docs.filter(F.crc32("url") % 5 < 2), docs.filter(F.crc32("url") % 5 >= 2)):
+        add_documents(
+            part, index_dir, n_partitions=3, with_offsets=True,
+            salt_df_threshold=40, n_salts=4,
+        )
+    names = [r["segment"] for r in list_segments(index_dir)]
+    sources = [_decoded_segment(index_dir, s) for s in names]
+    lo, hi = doc_bounds(index_dir)
+    span = hi - lo + 1
+
+    def salt(d):
+        return 1 + min(3, (d - lo) * 4 // span)
+
+    straddling = [
+        b for _, blocks in sources for b in blocks
+        if b[1] >= 100_000 and salt(b[2][0]) != salt(b[2][-1])
+    ]
+    assert straddling
+    deleted = set(range(0, 800, 13)) | set(straddling[0][2][:3])
+    delete_docs(index_dir, deleted)
+
+    row = merge_segments(spark, index_dir, names, n_partitions=3, n_salts=4)
+    got, blocks = _decoded_segment(index_dir, row["segment"])
+    want = {k: v for p, _ in sources for k, v in p.items() if k[1] not in deleted}
+    assert got == want
+    hot = {b[0] for _, bl in sources for b in bl if b[1] >= 100_000}
+    runs = {}
+    for term, block_no, ds in sorted(blocks, key=lambda b: (b[0], b[1])):
+        s = block_no // 100_000
+        assert s == 0 or term in hot, (term, block_no)
+        assert s == 0 or {salt(d) for d in ds} == {s}, (term, block_no)
+        runs.setdefault((term, s), []).extend(ds)
+    assert all(r == sorted(set(r)) for r in runs.values())
+    check_terms(index_dir)
+
+
 def test_select_merges_policy():
     mk = lambda n, b: {"segment": n, "bytes_packed": b, "status": "live"}  # noqa: E731
     segs = [mk("a", 100), mk("b", 120), mk("c", 110), mk("d", 130),

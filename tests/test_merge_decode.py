@@ -167,3 +167,33 @@ def test_decode_blocks_everything_deleted():
     )
     deleted = np.unique(np.concatenate([decode_doc_ids(r["doc_bytes"]) for r in rows]))
     assert decode_blocks(batch, deleted, LO, SPAN, N_SALTS, False, False) is None
+
+
+@pytest.mark.parametrize("deletes", ["none", "whole_block"])
+def test_decode_blocks_keeps_each_rows_target_salt(deletes):
+    """merge_segments gives a salted block one row per salt bucket its
+    [first, last] doc range touches (a ``salt`` column); decoding those
+    rows keeps each row's own salt's postings, so together they give
+    every posting exactly once, as the untagged decode does."""
+    rows = _blocks(seed=9)
+    deleted = _deleted(rows, deletes)
+    cols = ["term", "block_no", "doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes", "off_bytes"]
+
+    def salt(d):
+        return 1 + min(N_SALTS - 1, (d - LO) * N_SALTS // SPAN)
+
+    tagged = []
+    for r in rows:
+        docs = decode_doc_ids(r["doc_bytes"])
+        salts = [0] if r["block_no"] < 100_000 else range(salt(docs[0]), salt(docs[-1]) + 1)
+        tagged += [{**{c: r[c] for c in cols}, "salt": s} for s in salts]
+    assert len(tagged) > len(rows)  # some block straddles a salt boundary
+    batch = pa.RecordBatch.from_pylist(
+        tagged, schema=pa.RecordBatch.from_pylist(tagged).schema.set(
+            len(cols), pa.field("salt", pa.int32())
+        ),
+    )
+
+    got = decode_blocks(batch, deleted, LO, SPAN, N_SALTS, True, True)
+    want = _per_block(rows, deleted, True, True)
+    assert got.to_pydict() == want

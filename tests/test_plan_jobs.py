@@ -8,7 +8,8 @@ there is no postings scan to plan, no shuffle and no second stage,
 whatever the range count and however new the segment set. The indexed
 plan still scans through Spark and infers the postings' parquet schema
 once per segment set. The write path (build, add, merge) is pinned the
-same way."""
+same way, and so are the Python-UDF stages of each write and of one
+query per BM25 plan."""
 
 import itertools
 
@@ -185,15 +186,32 @@ def test_empty_result_starts_no_job_before_collect(spark, indexed, plan, terms, 
 # Jobs per write call on the fixtures below (800-doc build, 300-doc
 # add, merges of every live segment), as measured: upper bounds, so a
 # change that adds a driver action to the write path fails here. The
-# terms table comes from the pack job (no postings re-read), and a
-# purging merge anti-joins its norms with a JVM-built deleted-id frame
-# (one broadcast job each for the purged-id collect and the norms
+# terms table comes from the pack job (no postings re-read); a write of
+# at most salt_df_threshold docs runs no hot-term sample; merge reads
+# the blocks and norms with their known schemas (no footer inference);
+# and a purging merge anti-joins its norms with a JVM-built deleted-id
+# frame (one broadcast job each for the purged-id collect and the norms
 # write) and takes n_docs/sum_dl from the norms write's Observation.
-MAX_WRITE_JOBS = {"build": 7, "add": 14, "merge": 5, "merge_deletes": 8}
+MAX_WRITE_JOBS = {"build": 5, "add": 12, "merge": 3, "merge_deletes": 6}
+
+# Python-UDF plan nodes per call, summed over the executed plans of the
+# SQL executions the call ran: upper bounds. A write's one Python stage
+# is the pack kernel (doc ids are numbered in the JVM, and merge decodes
+# the shuffled blocks inside the pack task); a query's is its block
+# decode or WAND task, and the logical plan runs none.
+MAX_PYTHON_STAGES = {
+    "build": 1, "add": 1, "merge": 1, "merge_deletes": 1,
+    "wand": 1, "parallel": 1, "indexed": 1, "logical": 0,
+}
+_PYTHON_NODES = (
+    "MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+)
 
 
 def _jobs(spark, fn):
-    """(fn(), jobs started while it ran)."""
+    """(fn(), jobs started while it ran, Python-UDF nodes in the
+    executed plans of the SQL executions those jobs belong to)."""
     sc = spark.sparkContext
     group = f"write-jobs-{next(_groups)}"
     bus = sc._jsc.sc().listenerBus()
@@ -201,14 +219,24 @@ def _jobs(spark, fn):
     try:
         out = fn()
         bus.waitUntilEmpty()
-        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs = set(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return out, n
+    store = spark._jsparkSession.sharedState().statusStore()
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    python_nodes = 0
+    for e in as_java(store.executionsList()):
+        if jobs & {int(j) for j in as_java(e.jobs().keySet())}:
+            nodes = as_java(store.planGraph(e.executionId()).allNodes())
+            python_nodes += sum(n.name() in _PYTHON_NODES for n in nodes)
+    return out, len(jobs), python_nodes
 
 
-def test_write_path_job_counts(spark, tiny_corpus, tmp_path_factory):
+@pytest.fixture(scope="module")
+def write_path(spark, tiny_corpus, tmp_path_factory):
+    """{call: (jobs, Python-UDF nodes)} for a build, an add, a merge and
+    a purging merge, in that order on one index."""
     from ocaml_lucene_spark.index import segments as seg
     from ocaml_lucene_spark.index.build import add_documents
     from ocaml_lucene_spark.index.deletes import delete_docs
@@ -224,18 +252,52 @@ def test_write_path_job_counts(spark, tiny_corpus, tmp_path_factory):
     ]
     docs = assign_doc_ids(spark.read.parquet(tiny_corpus)).select("doc_id", "text").cache()
     docs.count()
-    jobs = {}
+    counts = {}
 
     def merge_all():
         live = [r["segment"] for r in seg.list_segments(index_dir)]
         return merge_segments(spark, index_dir, live, n_partitions=4)
 
-    _, jobs["build"] = _jobs(spark, lambda: build_index(docs, index_dir, n_partitions=4))
-    _, jobs["add"] = _jobs(spark, lambda: add_documents(extra[0], index_dir, n_partitions=4))
-    _, jobs["merge"] = _jobs(spark, merge_all)
+    def record(name, fn):
+        out, *counts[name] = _jobs(spark, fn)
+        return out
+
+    record("build", lambda: build_index(docs, index_dir, n_partitions=4))
+    record("add", lambda: add_documents(extra[0], index_dir, n_partitions=4))
+    record("merge", merge_all)
     add_documents(extra[1], index_dir, n_partitions=4)
     delete_docs(index_dir, range(0, 1400, 97))
-    m, jobs["merge_deletes"] = _jobs(spark, merge_all)
+    m = record("merge_deletes", merge_all)
     docs.unpersist()
     assert m["n_docs"] == 1400 - len(range(0, 1400, 97))
+    return counts
+
+
+def test_write_path_job_counts(write_path):
+    jobs = {k: v[0] for k, v in write_path.items()}
     assert all(jobs[k] <= MAX_WRITE_JOBS[k] for k in jobs), (jobs, MAX_WRITE_JOBS)
+
+
+def test_write_path_runs_one_python_stage(write_path):
+    stages = {k: v[1] for k, v in write_path.items()}
+    assert all(stages[k] <= MAX_PYTHON_STAGES[k] for k in stages), (stages, MAX_PYTHON_STAGES)
+
+
+@pytest.mark.parametrize("plan", ["wand", "parallel", "indexed", "logical"])
+def test_bm25_plan_python_stage_counts(spark, indexed, tiny_corpus, plan):
+    from ocaml_lucene_spark.query.bm25 import bm25_topk
+
+    index_dir, oracle, hot, mid = indexed
+    run = {
+        "wand": lambda: qx.bm25_topk_wand_exec(spark, index_dir, [hot, mid], "or", 10),
+        "parallel": lambda: qx.bm25_topk_wand_parallel(
+            spark, index_dir, [hot, mid], "or", 10, n_tasks=4
+        ),
+        "indexed": lambda: qx.bm25_topk_indexed(spark, index_dir, [hot, mid], "or", 10),
+        "logical": lambda: bm25_topk(
+            assign_doc_ids(spark.read.parquet(tiny_corpus)), [hot, mid], "or", 10
+        ),
+    }[plan]
+    rows, _, stages = _jobs(spark, lambda: [(r.doc_id, r.score) for r in run().collect()])
+    assert [d for d, _ in rows] == [d for d, _ in oracle.query([hot, mid], "or", 10)]
+    assert stages <= MAX_PYTHON_STAGES[plan], (plan, stages)

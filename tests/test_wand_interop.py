@@ -188,3 +188,28 @@ def test_cli_and_index_method(tmp_path, capsys):
     for (_d, s_api), (_d2, s_cli) in zip(api, hits):
         assert f"{s_api:.6f}" == s_cli  # the CLI prints 6dp
     assert wand_search.main([d, FIELD, "nothere"]) == 1
+
+
+def test_impact_bound_covers_every_frontier_score():
+    """A block's impact bound is >= the decoded score of every (freq,
+    norm) pair on its frontier, bit for bit: the bound and the scores
+    are one expression (query/wand.bm25_scores). Multiplying idf
+    outside the tf part instead lands one ulp under a real score in
+    about a quarter of such draws, and the strict ``bound < theta``
+    test then prunes a tied doc."""
+    from ocaml_lucene_spark.interop.wand_search import _DL_LUT, _impact_ub
+    from ocaml_lucene_spark.query.wand import bm25_scores
+
+    rng = np.random.default_rng(17)
+    norms = np.nonzero((_DL_LUT >= 1) & (_DL_LUT <= 1999))[0]
+    for _ in range(4000):
+        pairs = [
+            (int(rng.integers(1, 50)), int(rng.choice(norms)))
+            for _ in range(int(rng.integers(1, 6)))
+        ]
+        idf = float(rng.uniform(0.01, 12.0))
+        avgdl = float(rng.choice([137.3, rng.uniform(10.0, 500.0)]))
+        ub = _impact_ub(pairs, idf, avgdl)
+        tf = np.array([f for f, _ in pairs], dtype=np.float64)
+        scores = bm25_scores(idf, tf, _DL_LUT[[n for _, n in pairs]], avgdl)
+        assert (ub >= scores).all(), (pairs, idf, avgdl, ub, scores)
